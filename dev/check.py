@@ -5,7 +5,7 @@ same testdata, and compare (schema, rowcount, sorted values).
 
 Usage: python3 dev/check.py <sfDir> <verifyOutDir> [query ...]
 """
-import json, math, sys
+import json, math, os, sys
 import duckdb
 import pandas as pd
 
@@ -26,6 +26,13 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    # name -> error for each query Verify could not write; Verify writes it
+    # last, so a missing file means the run did not finish
+    failures_path = f"{out_dir}/failures.json"
+    if not os.path.exists(failures_path):
+        print(f"FAIL: {failures_path} missing: Verify did not finish")
+        sys.exit(1)
+    failures = json.load(open(failures_path))
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
@@ -34,6 +41,10 @@ def main():
             expected = con.execute(sql).df()
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {str(e)[:300]}")
+            n_fail += 1
+            continue
+        if name in failures:
+            print(f"FAIL {name}: spark failed: {failures[name][:300]}")
             n_fail += 1
             continue
         try:

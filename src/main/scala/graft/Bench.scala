@@ -16,10 +16,10 @@ import scala.util.control.NonFatal
 object Bench {
 
   /** Full-plan execution without a real sink. */
-  private def exec(df: DataFrame): Unit =
+  private[graft] def exec(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  private def time(fn: => Unit): Double = {
+  private[graft] def time(fn: => Unit): Double = {
     val t0 = System.nanoTime()
     fn
     (System.nanoTime() - t0) / 1e9
@@ -372,7 +372,7 @@ object Bench {
     * starts from a clean slate: Spark cache cleared, stray persisted RDDs
     * dropped, round-trip scratch dirs deleted.
     */
-  private def hygiene(spark: SparkSession): Unit = {
+  private[graft] def hygiene(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))

@@ -75,13 +75,15 @@ object Tables {
 
 /** Session factory with scale-appropriate defaults.
   *
-  * Defaults are tuned for local[32]/128 GiB but chosen to be the settings
-  * you'd also want on a 1000-executor cluster: AQE on (runtime coalescing +
-  * skew-join splitting), modest broadcast threshold, shuffle partitions
-  * sized to cores (the driver harness overrides via SPARK_GRAFT_CPUS).
+  * The defaults are the settings you'd also want on a 1000-executor
+  * cluster: AQE on (runtime coalescing + skew-join splitting), modest
+  * broadcast threshold, shuffle partitions sized to cores. Without an
+  * explicit `cpus` the session takes the host's core count — more task
+  * slots than cores only adds scheduling cost.
   */
 object GraftSession {
-  def builder(appName: String, cpus: Int = 32): SparkSession.Builder =
+  def builder(appName: String,
+              cpus: Int = Runtime.getRuntime.availableProcessors): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")

@@ -5,7 +5,7 @@ import java.text.Normalizer
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst Unicode-normalization expressions (whole-stage codegen).
@@ -140,16 +140,5 @@ object TextExpressions {
   def canonicalTextKey(c: Column): Column = {
     import org.apache.spark.sql.functions._
     trim(regexp_replace(lower(stripAccents(nfkc(c))), "\\s+", " "))
-  }
-
-  /** SQL registration (session-scoped), mirroring [[VectorExpressions]]. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("unicode_nfc",
-      exprs => UnicodeNormalize(exprs.head, "NFC"), "built-in")
-    reg.createOrReplaceTempFunction("unicode_nfkc",
-      exprs => UnicodeNormalize(exprs.head, "NFKC"), "built-in")
-    reg.createOrReplaceTempFunction("strip_accents",
-      exprs => StripAccents(exprs.head), "built-in")
   }
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Native Catalyst vector expressions (with whole-stage codegen).
   *
@@ -223,18 +222,6 @@ case class NearestCentroid(left: Expression, right: Expression)
 }
 
 object VectorExpressions {
-  /** Register `vec_dot` / `vec_cosine` as SQL functions in the session.
-    * (For cluster deployment the same builders are injected via
-    * [[GraftExtensions]] with `spark.sql.extensions`.)
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_dot",
-      exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_cosine",
-      exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-  }
-
   /** Column API (no registration needed): wraps the expression via the
     * classic converter (Spark 4 removed public Column(expr)).
     */
@@ -253,19 +240,4 @@ object VectorExpressions {
 
   private def expressionOf(c: Column): Expression =
     org.apache.spark.sql.graft.ColumnShim.expression(c)
-}
-
-/** `spark.sql.extensions=graft.functions.GraftExtensions` — injects the
-  * vector functions into every session (the cluster-wide registration
-  * path via SparkSessionExtensions).
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("vec_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "vec_cosine"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-  }
 }

@@ -55,18 +55,6 @@ object PageRank {
   def pageRankTracked(edgesRaw: DataFrame, srcCol: String, dstCol: String,
                       iters: Int = 3, damping: Double = 0.85): Checkpoints.Truncated = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    // phase timing to stderr when graft.pagerank.debugTiming=true — the
-    // d8 cold-protocol attribution channel (r16 verdict #2); zero cost
-    // when off
-    val dbg = edgesRaw.sparkSession.conf
-      .getOption("graft.pagerank.debugTiming").exists(_.toBoolean)
-    def phase[T](name: String)(f: => T): T =
-      if (!dbg) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"[pagerank] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
     // r17 setup slimming (guide §2.3/§5; the d8 cold-protocol phase
     // attribution showed the SETUP checkpoint is ~60% of the 10x wall —
     // iterations are 1–3 s each): the r16 shape attached the out-degree
@@ -85,15 +73,7 @@ object PageRank {
     val edges = edgesRaw
       .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
       .groupBy("src", "dst").agg(count(lit(1)).as("_m")).drop("_m")
-    // setup-stage plan dump (the registry plan only shows the final
-    // checkpoint scan — the stage this shape governs is the eager
-    // checkpoint INPUT): GRAFT_PR_PLAN=1 prints it before materializing
-    if (sys.env.contains("GRAFT_PR_PLAN")) {
-      println("== edge-checkpoint input (setup stage) ==")
-      edges.explain("formatted")
-    }
-    val weT = phase("edge checkpoint")(
-      Checkpoints.truncateTracked(edges, eager = true))
+    val weT = Checkpoints.truncateTracked(edges, eager = true)
     val we = weT.df
     // every node with its out-degree (null deg = dangling) — the second
     // per-iteration re-entrant table. Derived from the CHECKPOINTED edge
@@ -102,12 +82,12 @@ object PageRank {
     val srcDeg = we.groupBy(col("src"))
       .agg(count(lit(1)).cast("double").as("deg"))
       .select(col("src").as("node"), col("deg"))
-    val ndT = phase("nodesDeg checkpoint")(Checkpoints.truncateTracked(
+    val ndT = Checkpoints.truncateTracked(
       srcDeg.unionByName(
         we.select(col("dst").as("node")).distinct()
           .join(srcDeg.select("node"), Seq("node"), "left_anti")
           .withColumn("deg", lit(null).cast("double"))),
-      eager = true))
+      eager = true)
     val nodesDeg = ndT.df
     val nScalar = broadcast(nodesDeg.agg(count(lit(1)).cast("double").as("_n")))
     // (1 - damping) computed in IEEE double on BOTH engines (the oracle
@@ -137,14 +117,14 @@ object PageRank {
       val dangling = broadcast(
         r.where(col("deg").isNull)
           .agg(coalesce(round(sum(col("r")), 9), lit(0.0)).as("_mass")))
-      val nextT = phase(s"iteration $it")(Checkpoints.truncateTracked(
+      val nextT = Checkpoints.truncateTracked(
         nodesDeg.join(contrib.hint("shuffle_hash"), Seq("node"), "left")
           .crossJoin(nScalar).crossJoin(dangling)
           .select(col("node"), col("deg"),
             round(teleport / col("_n") + lit(damping) *
               (coalesce(col("contrib"), lit(0.0)) + col("_mass") / col("_n")),
               9).as("rank")),
-        eager = true))
+        eager = true)
       releasePrev() // new generation materialized; drop the old one
       releasePrev = nextT.release
       r = nextT.df.withColumnRenamed("rank", "r")

@@ -106,7 +106,7 @@ object GraftSql {
     "graft_minhash_sig" -> c1(c => graft.dedup.Dedup.minhashSigArray(c)),
     // its LSH bucket keys (position = band): posexplode → candidate join
     "graft_minhash_bands" -> c1(c => graft.dedup.Dedup.minhashBandKeys(c)),
-    // custom codegen expressions (same names their register() methods use)
+    // custom codegen expressions (unprefixed: their SQL names predate the table)
     "unicode_nfc" -> e1(UnicodeNormalize(_, "NFC")),
     "unicode_nfkc" -> e1(UnicodeNormalize(_, "NFKC")),
     "strip_accents" -> e1(StripAccents(_)),

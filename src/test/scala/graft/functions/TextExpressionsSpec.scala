@@ -7,7 +7,7 @@ class TextExpressionsSpec extends SparkSpec {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    TextExpressions.register(spark)
+    graft.sql.GraftSql.register(spark)
   }
 
   private val precomposedE = "é"      // é as one code point

@@ -7,7 +7,7 @@ class VectorExpressionsSpec extends SparkSpec {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    VectorExpressions.register(spark)
+    graft.sql.GraftSql.register(spark)
   }
 
   test("vec_dot and vec_cosine match hand math on doubles") {
