@@ -384,8 +384,11 @@ object Bench {
     // hygiene has already deleted — measured at +3–6 s on every later
     // q_stream_* reading (attribution: 10.8–14.5 s accumulated vs
     // 7.9–8.6 s unloaded — the r12 suite-loop stream inflation).
-    // No active query runs during hygiene, so unloading is safe; the
-    // method is private[sql] at the Scala level only, hence reflection.
+    // With the RocksDB provider each unloaded provider is closed, which
+    // closes its native RocksDB instance and deletes its local working
+    // copy. No active query runs during hygiene, so unloading is safe;
+    // the method is private[sql] at the Scala level only, hence
+    // reflection.
     unloadStateStores()
     // this JVM's ExtraQueries round-trip scratch ONLY — deleting the
     // shared root would yank a concurrent process's staging mid-write
@@ -403,7 +406,9 @@ object Bench {
     f.delete()
   }
 
-  /** `StateStore.unloadAll()` via reflection — see the hygiene note. */
+  /** `StateStore.unloadAll()` via reflection — see the hygiene note.
+    * It removes every loaded provider and calls its `close()`.
+    */
   private def unloadStateStores(): Unit = try {
     val cls = Class.forName(
       "org.apache.spark.sql.execution.streaming.state.StateStore$")

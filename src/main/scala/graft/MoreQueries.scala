@@ -1135,22 +1135,8 @@ object MoreQueries {
       val ckpt = ExtraQueries.tmp("stream_frontdoor_ckpt", dir)
       Seq(stage, sink, ckpt).foreach(ExtraQueries.rmrf)
       new java.io.File(stage).mkdirs()
-      val docs = t(s, dir, "documents").select("doc_id", "source", "text")
-      def pages(d: DataFrame, crawlId: Column): DataFrame =
-        d.select(crawlId.cast("long").as("crawl_id"), docHtml.as("html"))
-      val hist = pages(docs.where(col("doc_id") % 3 === 0), col("doc_id"))
-      val batch = pages(docs.where(col("doc_id") % 3 =!= 0), col("doc_id"))
-        .unionByName(pages(
-          docs.where(col("doc_id") % 3 === 0 && col("doc_id") < 120)
-            .withColumn("text", concat(col("text"), lit(" graftzz"))),
-          col("doc_id") + 5000000L))
-        .unionByName(pages(
-          docs.where(col("doc_id") % 3 === 0 &&
-            col("doc_id") >= 120 && col("doc_id") < 240),
-          col("doc_id") + 7000000L))
-        .unionByName(pages(
-          docs.where(col("doc_id") % 3 === 1 && col("doc_id") < 60),
-          col("doc_id") + 8000000L))
+      val (hist, batch) = frontDoorCrawl(
+        t(s, dir, "documents").select("doc_id", "source", "text"))
       def stageFile(df: DataFrame, name: String): Unit = {
         val tmpd = s"$stage/_w_$name"
         df.coalesce(1).write.mode("overwrite").parquet(tmpd)
@@ -1186,29 +1172,7 @@ object MoreQueries {
         new java.io.File(s"$stage/hist.parquet").setLastModified(1000000000000L)
         new java.io.File(s"$stage/batch.parquet").setLastModified(1000000060000L)
         runOnce() // micro-batch 1: history pages; micro-batch 2: the crawl
-        // one verdict per crawled page: exact beats near beats unique;
-        // dup_of = canonical (min) match, jaccard = strongest match.
-        // Multi-bucket duplicate emissions collapse under the distinct
-        // + min/max aggregates (the batch path's .distinct()).
-        val pairs = s.read.parquet(sink).distinct()
-        val ex = pairs.where(col("exact"))
-          .groupBy(col("new_id").as("crawl_id"))
-          .agg(min("dup_id").as("dup_of_e"))
-        val nr = pairs.where(!col("exact"))
-          .groupBy(col("new_id").as("crawl_id"))
-          .agg(min("dup_id").as("dup_of_n"), max("jaccard").as("jac_n"))
-        batch.select("crawl_id")
-          .join(ex, Seq("crawl_id"), "left")
-          .join(nr, Seq("crawl_id"), "left")
-          .select(col("crawl_id"),
-            when(col("dup_of_e").isNotNull, lit("exact_dup"))
-              .when(col("dup_of_n").isNotNull, lit("near_dup"))
-              .otherwise(lit("unique")).as("status"),
-            coalesce(col("dup_of_e"), col("dup_of_n"), lit(-1L)).as("dup_of"),
-            when(col("dup_of_e").isNotNull, lit(1.0))
-              .when(col("jac_n").isNotNull, col("jac_n"))
-              .otherwise(lit(0.0)).as("jaccard"))
-          .orderBy("crawl_id").localCheckpoint()
+        frontDoorVerdicts(s.read.parquet(sink), batch).localCheckpoint()
       } finally Seq(stage, sink, ckpt).foreach(ExtraQueries.rmrf)
     }, Some {
       val bandSelects = (0 until 4).map { b =>
@@ -1309,6 +1273,60 @@ object MoreQueries {
       ORDER BY b.crawl_id"""
     })),
   )
+
+  /** q_stream_frontdoor's crawl over `(doc_id, source, text)` docs:
+    * history pages (every `doc_id % 3 == 0` page under its own id), then
+    * a crawl batch of fresh originals plus three planted re-crawl
+    * classes — ' graftzz' near re-crawls of history (+5,000,000),
+    * byte-identical history re-crawls (+7,000,000) and intra-batch page
+    * dups (+8,000,000). Both frames are `(crawl_id, html)`.
+    */
+  private[graft] def frontDoorCrawl(docs: DataFrame): (DataFrame, DataFrame) = {
+    def pages(d: DataFrame, crawlId: Column): DataFrame =
+      d.select(crawlId.cast("long").as("crawl_id"), docHtml.as("html"))
+    val hist = pages(docs.where(col("doc_id") % 3 === 0), col("doc_id"))
+    val batch = pages(docs.where(col("doc_id") % 3 =!= 0), col("doc_id"))
+      .unionByName(pages(
+        docs.where(col("doc_id") % 3 === 0 && col("doc_id") < 120)
+          .withColumn("text", concat(col("text"), lit(" graftzz"))),
+        col("doc_id") + 5000000L))
+      .unionByName(pages(
+        docs.where(col("doc_id") % 3 === 0 &&
+          col("doc_id") >= 120 && col("doc_id") < 240),
+        col("doc_id") + 7000000L))
+      .unionByName(pages(
+        docs.where(col("doc_id") % 3 === 1 && col("doc_id") < 60),
+        col("doc_id") + 8000000L))
+    (hist, batch)
+  }
+
+  /** One verdict per crawled page of `batch` from the front door's sink
+    * `pairs`: exact beats near beats unique; dup_of = canonical (min)
+    * match, jaccard = strongest match. Multi-bucket duplicate emissions
+    * collapse under the distinct + min/max aggregates (the batch path's
+    * .distinct()).
+    */
+  private[graft] def frontDoorVerdicts(pairs: DataFrame, batch: DataFrame): DataFrame = {
+    val distinctPairs = pairs.distinct()
+    val ex = distinctPairs.where(col("exact"))
+      .groupBy(col("new_id").as("crawl_id"))
+      .agg(min("dup_id").as("dup_of_e"))
+    val nr = distinctPairs.where(!col("exact"))
+      .groupBy(col("new_id").as("crawl_id"))
+      .agg(min("dup_id").as("dup_of_n"), max("jaccard").as("jac_n"))
+    batch.select("crawl_id")
+      .join(ex, Seq("crawl_id"), "left")
+      .join(nr, Seq("crawl_id"), "left")
+      .select(col("crawl_id"),
+        when(col("dup_of_e").isNotNull, lit("exact_dup"))
+          .when(col("dup_of_n").isNotNull, lit("near_dup"))
+          .otherwise(lit("unique")).as("status"),
+        coalesce(col("dup_of_e"), col("dup_of_n"), lit(-1L)).as("dup_of"),
+        when(col("dup_of_e").isNotNull, lit(1.0))
+          .when(col("jac_n").isNotNull, col("jac_n"))
+          .otherwise(lit(0.0)).as("jaccard"))
+      .orderBy("crawl_id")
+  }
 
   /** The synthesized page for the q_html_* rows — ONE shape rendered by
     * both engines: [[docHtml]] (Column) and [[docHtmlSql]] (DuckDB) build

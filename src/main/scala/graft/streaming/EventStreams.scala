@@ -329,8 +329,10 @@ object EventStreams {
     * (Spark disables AQE for stateful workloads), so the state-store
     * partition count is whatever `spark.sql.shuffle.partitions` says
     * when the checkpoint is created — and every micro-batch then pays
-    * one task + one state-store delta file PER PARTITION PER STATEFUL
-    * OPERATOR regardless of data volume. Sizing: one partition per
+    * one task + one state-store commit PER PARTITION PER STATEFUL
+    * OPERATOR regardless of data volume (with [[graft.GraftSession]]'s
+    * RocksDB provider: one changelog file per partition per batch, plus
+    * one open native RocksDB instance per partition). Sizing: one partition per
     * `graft.stream.bytesPerStatePartition` staged bytes (default 32 MiB),
     * capped at 4× the cluster's default parallelism (the cap rules at
     * 100 TB — partitions scale with the cluster; the byte rule rules on

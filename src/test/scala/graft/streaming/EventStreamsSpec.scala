@@ -332,26 +332,9 @@ class EventStreamsSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.expressions.Window
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("source"), col("text"))
-    def pages(d: DataFrame, crawlId: org.apache.spark.sql.Column): DataFrame =
-      d.select(crawlId.cast("long").as("crawl_id"),
-        graft.MoreQueries.docHtml.as("html"))
-    // history: every %3==0 page under its own id
-    val hist = pages(docs.where(col("doc_id") % 3 === 0), col("doc_id"))
-    // batch: fresh originals + three planted re-crawl classes
-    val batch = pages(docs.where(col("doc_id") % 3 =!= 0), col("doc_id"))
-      .unionByName(pages( // near re-crawls of history (text + ' graftzz')
-        docs.where(col("doc_id") % 3 === 0 && col("doc_id") < 120)
-          .withColumn("text", concat(col("text"), lit(" graftzz"))),
-        col("doc_id") + 5000000L))
-      .unionByName(pages( // byte-identical re-crawls of history pages
-        docs.where(col("doc_id") % 3 === 0 &&
-          col("doc_id") >= 120 && col("doc_id") < 240),
-        col("doc_id") + 7000000L))
-      .unionByName(pages( // intra-batch exact dups of batch originals
-        docs.where(col("doc_id") % 3 === 1 && col("doc_id") < 60),
-        col("doc_id") + 8000000L))
+    // history pages, then a crawl batch with three planted re-crawl classes
+    val (hist, batch) = graft.MoreQueries.frontDoorCrawl(
+      spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "source", "text"))
     val root = Files.createTempDirectory("stream_frontdoor").toString
     def stage(df: DataFrame, name: String): Unit = {
       val tmpd = s"$root/_w_$name"
@@ -509,34 +492,156 @@ class EventStreamsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$root/sink").count() == 0)
   }
 
-  test("RocksDB state store produces identical results to the default provider") {
+  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
+  private val rocksProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val hdfsProvider =
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+
+  /** `body` with the session's state-store provider set to `provider`. */
+  private def withProvider[T](provider: String)(body: => T): T = {
+    val saved = spark.conf.get(providerKey)
+    spark.conf.set(providerKey, provider)
+    try body finally spark.conf.set(providerKey, saved)
+  }
+
+  /** The provider a checkpoint's offset log recorded for `batchId`. */
+  private def recordedProvider(ckpt: String, batchId: Int): String = {
+    val log = new String(Files.readAllBytes(Paths.get(s"$ckpt/offsets/$batchId")))
+    val m = ("\"" + java.util.regex.Pattern.quote(providerKey) + "\":\"([^\"]+)\"")
+      .r.findFirstMatchIn(log)
+    m.map(_.group(1)).getOrElse(fail(s"no $providerKey in $ckpt/offsets/$batchId"))
+  }
+
+  test("RocksDB state store produces identical results to the HDFS-backed provider") {
     // at 100 TB the in-memory HDFS-backed state store is the wrong
-    // provider — sessions/windows/join state must spill; Spark bundles
-    // RocksDB for exactly this. Same sessionization, same answers —
-    // switching the provider is a config, not a code change.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val sess = EventStreams.sessionize(staged)
-      EventStreams.runToMemory(sess.toDF(), "sessions_rocks", OutputMode.Append())
-      val rocks = spark.table("sessions_rocks")
-        .where(col("user_id") =!= -1)
-        .select("user_id", "startSec", "endSec", "n_events")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-      spark.conf.unset(key) // default provider for the reference run
-      val sessD = EventStreams.sessionize(staged)
-      EventStreams.runToMemory(sessD.toDF(), "sessions_default", OutputMode.Append())
-      val dflt = spark.table("sessions_default")
-        .where(col("user_id") =!= -1)
-        .select("user_id", "startSec", "endSec", "n_events")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-      assert(rocks == dflt && rocks.nonEmpty)
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    // provider — sessions/windows/join state must spill; GraftSession
+    // therefore defaults to RocksDB. Both providers are named here, so
+    // the comparison holds whatever the session default is.
+    def sessions(provider: String, name: String): Set[(Long, Long, Long, Int)] =
+      withProvider(provider) {
+        EventStreams.runToMemory(EventStreams.sessionize(staged).toDF(), name,
+          OutputMode.Append())
+        spark.table(name)
+          .where(col("user_id") =!= -1)
+          .select("user_id", "startSec", "endSec", "n_events")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
+      }
+    val rocks = sessions(rocksProvider, "sessions_rocks")
+    val hdfs = sessions(hdfsProvider, "sessions_hdfs")
+    assert(rocks == hdfs && rocks.nonEmpty)
+  }
+
+  test("front-door checkpoints resume on the provider recorded in their offset log") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import org.apache.spark.sql.streaming.Trigger
+    assert(spark.conf.get(providerKey) == rocksProvider)
+    val (hist, batch) = graft.MoreQueries.frontDoorCrawl(
+      spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "source", "text"))
+    val root = Files.createTempDirectory("frontdoor_restart").toString
+    def stage(df: DataFrame, name: String): Path = {
+      val tmpd = s"$root/_w_$name"
+      df.coalesce(1).write.mode("overwrite").parquet(tmpd)
+      Files.list(Paths.get(tmpd)).filter(_.toString.endsWith(".parquet")).findFirst().get()
     }
+    val histFile = stage(hist, "hist")
+    val batchFile = stage(batch, "batch")
+    // a stream's input dir receives the staged files; the history file is
+    // older, so one maxFilesPerTrigger=1 run reads it in micro-batch 0
+    def feed(stream: String, file: Path, name: String, mtime: Long): Unit = {
+      val to = Paths.get(s"$root/$stream/in/$name.parquet")
+      Files.createDirectories(to.getParent)
+      Files.copy(file, to)
+      to.toFile.setLastModified(mtime)
+    }
+    def run(s: SparkSession, stream: String): Unit =
+      EventStreams.withStatePartitions(s, 2) {
+        val q = StreamDedup.frontDoor(
+            s.readStream.schema("crawl_id BIGINT, html STRING")
+              .option("maxFilesPerTrigger", "1")
+              .parquet(s"$root/$stream/in/*.parquet"),
+            threshold = 0.8, maxBucket = 1000000)
+          .writeStream.format("parquet")
+          .option("path", s"$root/$stream/sink")
+          .option("checkpointLocation", s"$root/$stream/ckpt")
+          .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        EventStreams.awaitBounded(q)
+      }
+    // a restart: every loaded state store is closed, and the next run
+    // starts from a new session, so state comes back from the checkpoint
+    def fresh(): SparkSession = { graft.Bench.hygiene(spark); spark.newSession() }
+    def sink(stream: String): DataFrame = spark.read.parquet(s"$root/$stream/sink")
+    def hits(stream: String): Set[(Long, Long, Double, Boolean)] =
+      sink(stream).select("new_id", "dup_id", "jaccard", "exact").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSet
+
+    // one uninterrupted run on the default provider: history, then crawl
+    feed("u", histFile, "hist", 1000000000000L)
+    feed("u", batchFile, "batch", 1000000060000L)
+    run(spark, "u")
+    assert(recordedProvider(s"$root/u/ckpt", 0) == rocksProvider)
+
+    // (a) a checkpoint made with the HDFS-backed provider, resumed under
+    // the RocksDB default, keeps its provider and reads the crawl file
+    val made = spark.newSession()
+    made.conf.set(providerKey, hdfsProvider)
+    feed("a", histFile, "hist", 1000000000000L)
+    run(made, "a")
+    val resumed = fresh()
+    assert(resumed.conf.get(providerKey) == rocksProvider)
+    feed("a", batchFile, "batch", 1000000060000L)
+    run(resumed, "a")
+    assert(recordedProvider(s"$root/a/ckpt", 0) == hdfsProvider)
+    assert(recordedProvider(s"$root/a/ckpt", 1) == hdfsProvider)
+    assert(hits("a") == hits("u"))
+    assert(hits("a").exists(_._1 >= 5000000L))
+
+    // (b) a RocksDB stream stopped after its history file and restarted
+    // from a new session on the same checkpoint answers q_stream_frontdoor
+    feed("b", histFile, "hist", 1000000000000L)
+    run(spark.newSession(), "b")
+    val restarted = fresh()
+    feed("b", batchFile, "batch", 1000000060000L)
+    run(restarted, "b")
+    assert(recordedProvider(s"$root/b/ckpt", 0) == rocksProvider)
+    assert(recordedProvider(s"$root/b/ckpt", 1) == rocksProvider)
+    val expected = graft.MoreQueries.registry("q_stream_frontdoor")._1(spark, sfDir).collect().toSeq
+    val got = graft.MoreQueries.frontDoorVerdicts(sink("b"), batch).collect().toSeq
+    assert(got == expected)
+    assert(got.exists(_.getString(1) == "near_dup") && got.exists(_.getString(1) == "exact_dup"))
+  }
+
+  test("Bench.hygiene closes every RocksDB state store and deletes its local copy") {
+    // StateStore's loaded-provider map is private to Spark; read it
+    // reflectively to reach the providers this query left loaded
+    def loaded(): Map[String, AnyRef] = {
+      val cls = Class.forName("org.apache.spark.sql.execution.streaming.state.StateStore$")
+      val m = cls.getDeclaredMethod("loadedProviders")
+      m.setAccessible(true)
+      val map = m.invoke(cls.getField("MODULE$").get(null))
+        .asInstanceOf[scala.collection.mutable.HashMap[AnyRef, AnyRef]]
+      map.synchronized(map.toMap.map { case (k, v) => k.toString -> v })
+    }
+    def localDir(provider: AnyRef): java.io.File = {
+      val db = provider.getClass.getMethod("rocksDB").invoke(provider)
+      db.getClass.getMethod("localRootDir").invoke(db).asInstanceOf[java.io.File]
+    }
+    val ckpt = Files.createTempDirectory("hygiene_rocks").toString
+    val runId = EventStreams.withStatePartitions(spark, 2) {
+      val q = EventStreams.sessionize(staged).toDF().writeStream
+        .format("noop").option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append())
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      EventStreams.awaitBounded(q)
+      s"queryRunId=${q.runId}"
+    }
+    val mine = loaded().collect { case (id, p) if id.contains(runId) => p }
+    assert(mine.nonEmpty && mine.forall(_.getClass.getName == rocksProvider))
+    val dirs = mine.map(localDir)
+    assert(dirs.forall(_.isDirectory))
+    graft.Bench.hygiene(spark)
+    assert(!loaded().keys.exists(_.contains(runId)))
+    assert(dirs.forall(!_.exists()))
   }
 
   test("adaptiveStatePartitions sizes from staged bytes, clamped both ends") {
