@@ -2,15 +2,22 @@
 """Parent-vs-change A/B of one e2ebench workload.
 
     python3 dev/ab.py --workload frontdoor_stream --pairs 10 --seconds 5
-        [--base HEAD] [--seed 1] [--trace] [--workdir DIR]
+        [--base REV] [--seed 1] [--trace] [--workdir DIR]
 
 Run from the repository root. The change is the working tree as it stands
-(committed or not); the parent is `--base` (default HEAD, the parent of an
-uncommitted change), exported with `git archive` into a fresh directory so
-nothing in the repository's git metadata changes. Pair i runs both sides on
+(committed or not); the parent is `--base`, exported with `git archive` into
+a fresh directory so nothing in the repository's git metadata changes.
+Without `--base` the parent is HEAD when tracked files have uncommitted
+changes and HEAD~1 when they do not; a parent whose tree is the working
+tree's is refused, since both sides would run the same code. Pair i runs both sides on
 seed `--seed + i`, with the parent first on even pairs and the change first
 on odd ones. Each side builds into its own .bench_build, so the two builds
 never overwrite each other.
+
+Besides e2ebench's own metrics, each run records `peak_rss_mb`: the
+harness JVM's peak resident set (VmHWM), polled from /proc while it runs.
+It counts native memory that the heap metric cannot see, such as RocksDB's
+memtables and block cache.
 
 It prints every run's metrics as it goes, then, per metric, each side's
 median and quartiles, the median change in percent, the parent's
@@ -32,9 +39,11 @@ import subprocess
 import sys
 import tarfile
 import tempfile
+import time
 
 ROOT = os.getcwd()
 MIN_PAIRS = 10  # fewer pairs than this cannot show a gain or a loss
+HARNESS_MAIN = "graft.e2ebench.Main"
 
 
 def better_of():
@@ -53,18 +62,71 @@ def export(rev, dest):
         t.extractall(dest)
 
 
+def harness_hwm_kb(root_pid):
+    """VmHWM (kB) of the harness JVM among `root_pid`'s descendants, or None."""
+    children = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open("/proc/%s/stat" % d) as f:
+                st = f.read()
+            children.setdefault(int(st[st.rindex(")") + 2:].split()[1]), []).append(d)
+        except (OSError, ValueError, IndexError):
+            pass
+    todo = list(children.get(root_pid, []))
+    while todo:
+        pid = todo.pop()
+        todo.extend(children.get(int(pid), []))
+        try:
+            with open("/proc/%s/cmdline" % pid, "rb") as f:
+                if HARNESS_MAIN.encode() not in f.read().split(b"\0"):
+                    continue
+            with open("/proc/%s/status" % pid) as f:
+                for ln in f:
+                    if ln.startswith("VmHWM:"):
+                        return int(ln.split()[1])
+        except OSError:
+            pass
+    return None
+
+
 def run(cwd, workload, seed, seconds, trace, log):
-    """One e2ebench run in `cwd`; returns (exit code, parsed result or None)."""
+    """One e2ebench run in `cwd`; returns (exit code, parsed result or None).
+
+    The result's metrics gain `peak_rss_mb`, the last VmHWM read from the
+    harness JVM (polled every 0.2 s, so a rise in its last 0.2 s is missed).
+    """
     cmd = [sys.executable, "e2ebench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", "1" if trace else "0"]
-    r = subprocess.run(cmd, cwd=cwd, stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True)
-    with open(log, "w") as f:
-        f.write(r.stdout)
-    lines = [ln for ln in r.stdout.splitlines() if ln.startswith("{")]
+    with open(log, "w+") as f:
+        p = subprocess.Popen(cmd, cwd=cwd, stdout=f, stderr=subprocess.STDOUT, text=True)
+        hwm = None
+        while p.poll() is None:
+            hwm = harness_hwm_kb(p.pid) or hwm
+            time.sleep(0.2)
+        f.seek(0)
+        out = f.read()
+    lines = [ln for ln in out.splitlines() if ln.startswith("{")]
     try:
-        return r.returncode, json.loads(lines[-1]) if lines else None
+        res = json.loads(lines[-1]) if lines else None
     except ValueError:
-        return r.returncode, None
+        res = None
+    if res is not None and hwm is not None:
+        res.setdefault("metrics", {})["peak_rss_mb"] = {"value": hwm / 1024.0}
+    return p.returncode, res
+
+
+def default_base():
+    """HEAD for an uncommitted change, else HEAD~1 (the last commit's parent)."""
+    dirty = subprocess.run(["git", "status", "--porcelain", "--untracked-files=no"], cwd=ROOT,
+                           stdout=subprocess.PIPE, text=True, check=True).stdout.strip()
+    return "HEAD" if dirty else "HEAD~1"
+
+
+def same_tree(rev):
+    """True when `rev`'s tree is the working tree's: no tracked file differs."""
+    return subprocess.run(["git", "diff", "--quiet", rev, "--"], cwd=ROOT).returncode == 0
 
 
 def quartiles(xs):
@@ -112,7 +174,8 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seconds", type=float, default=5)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--base", default="HEAD")
+    ap.add_argument("--base", default=None,
+                    help="parent revision (default: HEAD if tracked files changed, else HEAD~1)")
     ap.add_argument("--trace", action="store_true")
     ap.add_argument("--workdir", default=None,
                     help="where the parent is exported and logs are kept (default: a new temp dir)")
@@ -125,8 +188,11 @@ def main():
     base = os.path.join(work, "parent")
     if os.path.exists(base):
         sys.exit("dev/ab.py: %s exists; pass an empty --workdir" % base)
-    rev = subprocess.run(["git", "rev-parse", "--short", a.base], cwd=ROOT, stdout=subprocess.PIPE,
-                         text=True, check=True).stdout.strip()
+    rev = subprocess.run(["git", "rev-parse", "--short", a.base or default_base()], cwd=ROOT,
+                         stdout=subprocess.PIPE, text=True, check=True).stdout.strip()
+    if same_tree(rev):
+        sys.exit("dev/ab.py: parent %s has the working tree's files; both sides would be the same code"
+                 % rev)
     export(rev, base)
     print("parent %s exported to %s; change = working tree %s" % (rev, base, ROOT), flush=True)
 

@@ -1921,8 +1921,7 @@ object Bench {
             }
             def run(): Unit = {
               val es = graft.streaming.EventStreams
-              es.withStatePartitions(spark,
-                  es.adaptiveStatePartitions(spark, s"$dir/in")) {
+              es.withStagedState(spark, s"$dir/in") {
                 val q = graft.streaming.StreamDedup.nearDupPairs(
                     spark.readStream.schema("doc_id BIGINT, text STRING")
                       .parquet(s"$dir/in/*.parquet"),
@@ -2036,8 +2035,7 @@ object Bench {
             else graft.streaming.StreamDedup.nearDupPairs(
               src.drop("ts"), threshold = 0.8, maxBucket = 1000000)
           val es = graft.streaming.EventStreams
-          val q = es.withStatePartitions(spark,
-              es.adaptiveStatePartitions(spark, s"$dir/in")) {
+          val q = es.withStagedState(spark, s"$dir/in") {
             val q0 = pairs.writeStream.format("parquet")
               .option("path", s"$dir/sink")
               .option("checkpointLocation", s"$dir/ckpt")
@@ -2196,8 +2194,7 @@ object Bench {
         val out = s"$d4root/run$d4run"
         val es = graft.streaming.EventStreams
         val stream = es.readEvents(spark, s"$d4root/in$tag", "*.parquet")
-        es.withStatePartitions(spark,
-            es.adaptiveStatePartitions(spark, s"$d4root/in$tag")) {
+        es.withStagedState(spark, s"$d4root/in$tag") {
           val q = es.hourlyCounts(stream)
             .writeStream.format("parquet")
             .option("path", s"$out/sink").option("checkpointLocation", s"$out/ckpt")
@@ -2241,8 +2238,7 @@ object Bench {
           hist.write.mode("overwrite").parquet(s"$dir/in")
           def run(): Unit = {
             val es = graft.streaming.EventStreams
-            es.withStatePartitions(spark,
-                es.adaptiveStatePartitions(spark, s"$dir/in")) {
+            es.withStagedState(spark, s"$dir/in") {
               val q = es.hourlyCounts(
                   es.readEvents(spark, s"$dir/in", "*.parquet"))
                 .writeStream.format("parquet")

@@ -1413,7 +1413,7 @@ object ExtraQueries {
         java.nio.file.Paths.get(s"$stage/zz_sentinel.parquet"))
       val stream = graft.streaming.EventStreams.readEvents(s, stage, "*.parquet")
       val es = graft.streaming.EventStreams
-      es.withStatePartitions(s, es.adaptiveStatePartitions(s, stage)) {
+      es.withStagedState(s, stage) {
         val q = es.hourlyCounts(stream)
           .writeStream.format("parquet")
           .option("path", sink).option("checkpointLocation", ckpt)
@@ -1498,7 +1498,7 @@ object ExtraQueries {
       val stream = graft.streaming.EventStreams.readEvents(s, stage, "*.parquet")
         .withColumn("value", round(col("value") * 100)) // exact cents-in-double
       val es = graft.streaming.EventStreams
-      es.withStatePartitions(s, es.adaptiveStatePartitions(s, stage)) {
+      es.withStagedState(s, stage) {
         val q = es.sessionize(stream)
           .toDF().writeStream.format("parquet")
           .option("path", sink).option("checkpointLocation", ckpt)
@@ -1562,7 +1562,7 @@ object ExtraQueries {
         java.nio.file.Paths.get(s"$stage/zz_sentinel.parquet"))
       val stream = graft.streaming.EventStreams.readEvents(s, stage, "*.parquet")
       val es = graft.streaming.EventStreams
-      es.withStatePartitions(s, es.adaptiveStatePartitions(s, stage)) {
+      es.withStagedState(s, stage) {
         val q = es
           .funnelStream(stream, Seq("view", "click", "purchase"))
           .toDF().writeStream.format("parquet")
@@ -1628,7 +1628,7 @@ object ExtraQueries {
         java.nio.file.Paths.get(s"$stage/zz_sentinel.parquet"))
       val stream = graft.streaming.EventStreams.readEvents(s, stage, "*.parquet")
       val es = graft.streaming.EventStreams
-      es.withStatePartitions(s, es.adaptiveStatePartitions(s, stage)) {
+      es.withStagedState(s, stage) {
         val q = es.dedupStream(stream, Seq("event_id"))
           .writeStream.format("parquet")
           .option("path", sink).option("checkpointLocation", ckpt)
@@ -1678,7 +1678,7 @@ object ExtraQueries {
         java.nio.file.Paths.get(s"$stage/zz_sentinel.parquet"))
       val stream = graft.streaming.EventStreams.readEvents(s, stage, "*.parquet")
       val es = graft.streaming.EventStreams
-      es.withStatePartitions(s, es.adaptiveStatePartitions(s, stage)) {
+      es.withStagedState(s, stage) {
         val q = es.purchaseAttribution(stream)
           .writeStream.format("parquet")
           .option("path", sink).option("checkpointLocation", ckpt)
@@ -1729,7 +1729,7 @@ object ExtraQueries {
         val es = graft.streaming.EventStreams
         // run 2 resumes from the checkpoint, whose metadata pins run 1's
         // partition count — the formula only decides the FIRST run
-        es.withStatePartitions(s, es.adaptiveStatePartitions(s, stage)) {
+        es.withStagedState(s, stage) {
           val q = es.hourlyCounts(stream)
             .writeStream.format("parquet")
             .option("path", sink).option("checkpointLocation", ckpt)
@@ -2151,7 +2151,7 @@ object ExtraQueries {
         java.nio.file.Paths.get(s"$stage/zz_sentinel.parquet"))
       val stream = graft.streaming.EventStreams.readEvents(s, stage, "*.parquet")
       val es = graft.streaming.EventStreams
-      es.withStatePartitions(s, es.adaptiveStatePartitions(s, stage)) {
+      es.withStagedState(s, stage) {
         val q = es.viewConversion(stream)
           .writeStream.format("parquet")
           .option("path", sink).option("checkpointLocation", ckpt)

@@ -1033,7 +1033,7 @@ object MoreQueries {
           .option("maxFilesPerTrigger", "1")
           .parquet(s"$stage/*.parquet")
         val es = graft.streaming.EventStreams
-        es.withStatePartitions(s, es.adaptiveStatePartitions(s, stage)) {
+        es.withStagedState(s, stage) {
           val q = StreamDedup.nearDupPairs(stream, threshold = 0.8,
               maxBucket = 1000000)
             .writeStream.format("parquet")
@@ -1154,7 +1154,7 @@ object MoreQueries {
         // start + checkpoint setup saved (r16 verdict #7; see
         // q_stream_neardup)
         val es = graft.streaming.EventStreams
-        es.withStatePartitions(s, es.adaptiveStatePartitions(s, stage)) {
+        es.withStagedState(s, stage) {
           val q = StreamDedup.frontDoor(
               s.readStream.schema("crawl_id BIGINT, html STRING")
                 .option("maxFilesPerTrigger", "1")

@@ -696,7 +696,7 @@ object PipelineQueries {
       // oracle's // floors — identical on this data (values > 0) but
       // floor keeps the bin math engine-consistent for any sign
       val es = graft.streaming.EventStreams
-      es.withStatePartitions(s, es.adaptiveStatePartitions(s, stage)) {
+      es.withStagedState(s, stage) {
         val q = es.histogramCounts(stream,
             floor(round(col("value") * 100) / lit(2500.0)).cast("long"))
           .writeStream.format("parquet")

@@ -81,13 +81,18 @@ object Tables {
   * explicit `cpus` the session takes the host's core count — more task
   * slots than cores only adds scheduling cost.
   *
-  * Streaming state lives off the JVM heap: every stateful operator keeps
-  * its state in a native RocksDB instance per partition, and with
-  * changelog checkpointing each micro-batch commits only the changed
-  * keys. Spark's default `HDFSBackedStateStoreProvider` holds every
-  * loaded state version of every partition as a hash map on the heap
-  * (two by default). Spark records the provider in each checkpoint's
-  * offset log, so a checkpoint made under another provider resumes on it.
+  * Streaming state lives off the JVM heap by default: every stateful
+  * operator keeps its state in a native RocksDB instance per partition,
+  * and with changelog checkpointing each micro-batch commits only the
+  * changed keys. All instances in the JVM share one memory budget
+  * (Spark's `maxMemoryUsageMB`, 500 MB) for memtables and block cache,
+  * so native memory does not grow with the partition count. Spark's
+  * default `HDFSBackedStateStoreProvider` holds every loaded state
+  * version of every partition as a hash map on the heap (two by
+  * default); a replay whose staged input is small enough for that
+  * selects it through [[graft.streaming.EventStreams.withStagedState]].
+  * Spark records the provider in each checkpoint's offset log, so a
+  * checkpoint made under another provider resumes on it.
   */
 object GraftSession {
   def builder(appName: String,
@@ -103,10 +108,11 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config(graft.streaming.EventStreams.StateProviderKey,
+        graft.streaming.EventStreams.RocksDBStateProvider)
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
+      .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft-warehouse"))
 }

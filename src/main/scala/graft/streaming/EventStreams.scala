@@ -330,9 +330,9 @@ object EventStreams {
     * partition count is whatever `spark.sql.shuffle.partitions` says
     * when the checkpoint is created — and every micro-batch then pays
     * one task + one state-store commit PER PARTITION PER STATEFUL
-    * OPERATOR regardless of data volume (with [[graft.GraftSession]]'s
-    * RocksDB provider: one changelog file per partition per batch, plus
-    * one open native RocksDB instance per partition). Sizing: one partition per
+    * OPERATOR regardless of data volume (a delta file on the heap
+    * provider; a changelog file plus one open native RocksDB instance
+    * on RocksDB — see [[stateProviderFor]]). Sizing: one partition per
     * `graft.stream.bytesPerStatePartition` staged bytes (default 32 MiB),
     * capped at 4× the cluster's default parallelism (the cap rules at
     * 100 TB — partitions scale with the cluster; the byte rule rules on
@@ -344,7 +344,17 @@ object EventStreams {
     * grouped state is keyed logically, and a restarted query takes its
     * count from the checkpoint metadata, not this formula.
     */
-  def adaptiveStatePartitions(spark: SparkSession, stagedDirs: String*): Int = {
+  def adaptiveStatePartitions(spark: SparkSession, stagedDirs: String*): Int =
+    statePartitionsFor(spark, stagedBytes(spark, stagedDirs))
+
+  private def statePartitionsFor(spark: SparkSession, total: Long): Int = {
+    val perPart = spark.conf.getOption("graft.stream.bytesPerStatePartition")
+      .map(_.toLong).getOrElse(32L * 1024 * 1024)
+    val cap = math.max(1L, spark.sparkContext.defaultParallelism.toLong * 4)
+    math.max(1L, math.min(cap, (total + perPart - 1) / perPart)).toInt
+  }
+
+  private def stagedBytes(spark: SparkSession, stagedDirs: Seq[String]): Long = {
     // r17 (r16 advisor): size through Hadoop's FileSystem so hdfs://,
     // s3a:// and other non-local staging URIs are measured instead of
     // silently totalling 0 bytes (which pinned ONE state partition at
@@ -356,11 +366,50 @@ object EventStreams {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
     } catch { case scala.util.control.NonFatal(_) => 0L }
-    val total = stagedDirs.map(bytes).sum
-    val perPart = spark.conf.getOption("graft.stream.bytesPerStatePartition")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
-    val cap = math.max(1L, spark.sparkContext.defaultParallelism.toLong * 4)
-    math.max(1L, math.min(cap, (total + perPart - 1) / perPart)).toInt
+    stagedDirs.map(bytes).sum
+  }
+
+  val StateProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  val HeapStateProvider =
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+  val RocksDBStateProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** State-store provider for a replay of `stagedBytes` input bytes, the
+    * way the reference's reduce side keeps a fetched segment in memory
+    * only while it fits the shuffle buffer and otherwise sends it to
+    * disk. Up to 1/16 of `heapBytes` (this JVM's max heap, which local
+    * mode's executors share; on a cluster the driver's heap stands in
+    * for theirs) the state stays in the heap provider's hash maps: it
+    * holds two state versions per partition, and decoded rows outweigh
+    * their parquet bytes, so the input must be a small slice of the
+    * heap. Past it the state goes to RocksDB, off the heap.
+    *
+    * Small replays are the heap's side because RocksDB's cost is per
+    * row: every state row is a JNI put and get, which made the sf0.1
+    * stream joins and stream dedup 27–67 % slower (SCALING.md, the
+    * state-store residue note). A stream started without
+    * [[withStagedState]] — an open-ended ingest whose input is not
+    * staged up front — keeps the session default, RocksDB
+    * ([[graft.GraftSession]]), since its state grows with everything it
+    * will read.
+    */
+  def stateProviderFor(stagedBytes: Long,
+                       heapBytes: Long = Runtime.getRuntime.maxMemory): String =
+    if (stagedBytes <= heapBytes / 16) HeapStateProvider else RocksDBStateProvider
+
+  /** Run `body` (a stream start + drain over the files staged under
+    * `stagedDirs`) with the state-store partition count and provider
+    * chosen from the staged bytes ([[adaptiveStatePartitions]],
+    * [[stateProviderFor]]). Both confs are read at query START and then
+    * pinned in the checkpoint, so a restarted query keeps what its first
+    * run chose. Same single-threaded caveat as [[withStatePartitions]].
+    */
+  def withStagedState[T](spark: SparkSession, stagedDirs: String*)(body: => T): T = {
+    val bytes = stagedBytes(spark, stagedDirs)
+    withStatePartitions(spark, statePartitionsFor(spark, bytes)) {
+      withConf(spark, StateProviderKey, stateProviderFor(bytes))(body)
+    }
   }
 
   /** Run `body` (a stream start + drain) with
@@ -378,11 +427,16 @@ object EventStreams {
     * relies on; a concurrent deployment should give the bracketed
     * stream its own `SparkSession.newSession()`.
     */
-  def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
+  def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
+    withConf(spark, "spark.sql.shuffle.partitions", n.toString)(body)
+
+  private def withConf[T](spark: SparkSession, key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   /** Run any of the above to a memory sink until all available data is

@@ -206,15 +206,10 @@ object StreamDedup {
     * working against the retained prefix — best-effort there, complete
     * at the certification's effectively-unbounded cap). For a
     * continuous ingest compose with the TTL state discipline of
-    * [[nearDupPairsTtl]]. The bucket state lives in the session's
-    * RocksDB state store, off the JVM heap, but it is one value per
-    * bucket: every touched bucket's whole doc list is decoded and
-    * rewritten each micro-batch. A `transformWithState` port with an
-    * append-only `ListState` per bucket would write only the arrivals;
-    * it is deferred, because measured on the front-door benchmark it
-    * raised set-up time 18 % over RocksDB alone and one run in nine
-    * aborted natively (`std::bad_alloc`). A per-doc `MapState` cannot
-    * replace the bucket list: its state is scoped to the grouping key.
+    * [[nearDupPairsTtl]]. The bucket state is one value per bucket:
+    * every touched bucket's whole doc list is decoded and rewritten each
+    * micro-batch, whichever state-store provider holds it (ROADMAP
+    * item 3 has the measured case against a `transformWithState` port).
     */
   def frontDoor(pages: DataFrame, threshold: Double = 0.8,
                 numPerms: Int = 8, rowsPerBand: Int = 2,

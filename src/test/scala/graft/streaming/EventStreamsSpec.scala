@@ -665,6 +665,32 @@ class EventStreamsSpec extends SparkSpec {
     } finally spark.conf.unset(key)
   }
 
+  test("withStagedState keeps a small staged replay on the heap provider; larger input goes to RocksDB") {
+    import org.apache.spark.sql.streaming.Trigger
+    import scala.jdk.CollectionConverters._
+    // the staged events are far below 1/16 of the heap: the bracket
+    // pins the heap provider (recorded in the offset log) and one state
+    // partition, then restores the session's confs
+    val stagedBytes = Files.list(Paths.get(stagedDir)).iterator().asScala.map(Files.size).sum
+    val ckpt = Files.createTempDirectory("staged_heap").toString
+    val confBefore = (spark.conf.get(providerKey), spark.conf.get("spark.sql.shuffle.partitions"))
+    val parts = EventStreams.withStagedState(spark, stagedDir) {
+      val q = EventStreams.sessionize(staged).toDF().writeStream
+        .format("memory").queryName("staged_heap").option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
+      EventStreams.awaitBounded(q)
+      spark.conf.get("spark.sql.shuffle.partitions")
+    }
+    assert(recordedProvider(ckpt, 0) == hdfsProvider && parts == "1")
+    assert(spark.table("staged_heap").where(col("user_id") =!= -1).count() > 0)
+    assert((spark.conf.get(providerKey), spark.conf.get("spark.sql.shuffle.partitions")) == confBefore)
+    // the same bytes against a heap 16× their size sit on the threshold;
+    // one byte more of input crosses it
+    assert(EventStreams.stateProviderFor(stagedBytes) == hdfsProvider)
+    assert(EventStreams.stateProviderFor(stagedBytes, heapBytes = 16 * stagedBytes) == hdfsProvider)
+    assert(EventStreams.stateProviderFor(stagedBytes + 1, heapBytes = 16 * stagedBytes) == rocksProvider)
+  }
+
   test("withStatePartitions pins the conf inside the body and restores it") {
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
