@@ -175,13 +175,21 @@ class BenchBandSpec extends AnyFunSuite {
     // per-fire indexes all normalize against these denominators
     Seq("machine_probe", "machine_hash_probe", "machine_write_probe")
       .foreach { k => assert(Bench.bands.contains(k), s"no band for $k") }
-    // d-series trend keys: both scale sides banded for the long-lived
-    // trend points (d25 was shipped `unbanded` in r15 — verdict #2)
-    Seq("d25_stream_neardup", "d22_incr_near_dup", "d1_dedup_corpus",
-      "d8_pagerank", "d11_stream_restart").foreach { k =>
+    // d-series: the trend table is the one list of trend keys. Building
+    // it with no session at all proves that reading its keys runs no
+    // Spark job (every input is lazy), whatever the data directory.
+    val keys = Bench.trendTable(null, "/nonexistent/sf", "/nonexistent/scratch")
+      .map(_.key)
+    assert(keys.distinct == keys, s"duplicate trend keys: ${keys.diff(keys.distinct)}")
+    keys.foreach { k =>
       assert(Bench.bands.contains(s"${k}_1x"), s"no band for ${k}_1x")
       assert(Bench.bands.contains(s"${k}_10x"), s"no band for ${k}_10x")
     }
+    // and every committed d-band belongs to a row (no retired trend key
+    // left banded, no row-less band)
+    val rowBands = keys.flatMap(k => Seq(s"${k}_1x", s"${k}_10x")).toSet
+    val orphans = Bench.bands.keySet.filter(_.startsWith("d")) -- rowBands
+    assert(orphans.isEmpty, s"d-series bands with no trend row: ${orphans.toSeq.sorted}")
   }
 
   test("rotation never touches stream keys, >=1s keys, or unbanded keys") {
