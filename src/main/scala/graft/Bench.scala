@@ -72,13 +72,10 @@ object Bench {
         })
       .orElse {
         // class-dir runs where resources were not copied (dev/run.sh after
-        // a bare compile): resolve against the working directory first,
-        // then the canonical repo path as a last resort
-        Seq(new java.io.File(sys.props.getOrElse("user.dir", "."),
-              "src/main/resources/graft/bench_bands.json"),
-            new java.io.File(
-              "/root/repo/src/main/resources/graft/bench_bands.json"))
-          .find(_.isFile)
+        // a bare compile): resolve against the working directory
+        Some(new java.io.File(sys.props.getOrElse("user.dir", "."),
+              "src/main/resources/graft/bench_bands.json"))
+          .filter(_.isFile)
           .map(f => new String(
             java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
       }
@@ -271,21 +268,18 @@ object Bench {
       case _ =>
         // self-contained per-round flip keyed on the CURRENT round
         // number: BENCH_ROUND when the environment exports it, else
-        // max id over committed BENCH_r{N}.json + 1 (this round's id).
-        // Max, not count: counting files freezes or flips
-        // the parity when a round's artifact is missing or a stray file
-        // matches — the max id is robust to gaps and strays below it.
-        // No round artifacts visible (non-repo checkout) → rotation
-        // off, time everything.
+        // max id over the BENCH_r{N}.json files in the working directory
+        // + 1 (this round's id). Max, not count: counting files freezes or
+        // flips the parity when a round's artifact is missing or a stray
+        // file matches — the max id is robust to gaps and strays below it.
+        // No round artifacts in the working directory → rotation off,
+        // time everything.
         sys.env.get("BENCH_ROUND").flatMap(_.toIntOption).map(_ % 2)
           .orElse {
             val pat = "BENCH_r(\\d+)\\.json".r
-            Seq(new java.io.File(sys.props.getOrElse("user.dir", ".")),
-                new java.io.File("/root/repo"))
-              .iterator
-              .map(d => Option(d.list()).getOrElse(Array.empty[String])
-                .collect { case pat(n) => n.toInt })
-              .find(_.nonEmpty).map(ids => (ids.max + 1) % 2)
+            Some(Option(new java.io.File(sys.props.getOrElse("user.dir", ".")).list())
+                .getOrElse(Array.empty[String]).collect { case pat(n) => n.toInt })
+              .filter(_.nonEmpty).map(ids => (ids.max + 1) % 2)
           }
     }
   private[graft] def rotatedOut(name: String): Boolean =
@@ -530,6 +524,7 @@ object Bench {
     val twinCtl = scala.collection.mutable.LinkedHashMap[String, Double]()
     var b5PlanMatch: Option[Boolean] = None
     var suiteAttempted = false
+    var artifactWriteFailed = false
 
     def jmap(m: scala.collection.Map[String, Double]): String =
       m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
@@ -634,20 +629,19 @@ object Bench {
       val headlineQs = results.filter { case (k, _) => k.startsWith("b") } ++
         scaleTimes.collect { case (k, v) if k.startsWith("b") => s"${k}_10x" -> v }
       val summary = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries":${jmap(headlineQs)},"failed":$failedJson,${tailFields(s""""rotated_n":${rotated.size}""")},"full_artifact":"BENCH_FULL.json","summary_artifact":"BENCH_SUMMARY.json"}"""
-      try {
-        val w = new java.io.PrintWriter("/root/repo/BENCH_FULL.json")
-        try w.println(json) finally w.close()
-      } catch { case NonFatal(_) => () } // repo may be elsewhere; stdout is canonical
-      try {
-        // the compact summary ALSO lands as a file: pure JSON, no log
-        // framing, for parsers the stdout tail defeats
-        val w = new java.io.PrintWriter("/root/repo/BENCH_SUMMARY.json")
-        try w.println(summary) finally w.close()
-      } catch { case NonFatal(_) => () }
-      try {
-        val w = new java.io.PrintWriter("/root/repo/BENCH_PLANS.txt")
-        try w.print(planDump.toString) finally w.close()
-      } catch { case NonFatal(_) => () }
+      // the artifacts land in the run's working directory; the compact
+      // summary ALSO lands as a file: pure JSON, no log framing, for
+      // parsers the stdout tail defeats. A failed write is reported and
+      // fails the run at exit, after the stdout lines are printed.
+      Seq("BENCH_FULL.json" -> s"$json\n", "BENCH_SUMMARY.json" -> s"$summary\n",
+          "BENCH_PLANS.txt" -> planDump.toString).foreach { case (name, body) =>
+        val f = java.nio.file.Paths.get(sys.props.getOrElse("user.dir", "."), name)
+        try java.nio.file.Files.writeString(f, body)
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] could not write $f: $e")
+          artifactWriteFailed = true
+        }
+      }
       if (printFull) println(json)
       if (printSummary) println(summary)
       System.out.flush()
@@ -900,7 +894,7 @@ object Bench {
     spark.stop()
     val missingFromSuite = (Queries.queries.keySet -- results.keySet
       -- failed.toSet -- skipped.toSet -- rotated.toSet).toSeq.sorted
-    if (failed.nonEmpty || missingFromSuite.nonEmpty) sys.exit(1)
+    if (failed.nonEmpty || missingFromSuite.nonEmpty || artifactWriteFailed) sys.exit(1)
   }
 
   /** Headline benches + controls over 10x-amplified inputs, then the

@@ -2,8 +2,19 @@ package graft.sources
 
 import java.io.FileNotFoundException
 
-import org.apache.hadoop.fs.Path
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.ParquetProperties
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.rewrite.{ParquetRewriter, RewriteOptions}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 
 /** Small-file compaction — the warehouse housekeeping job every
   * streaming/incremental sink needs (reference-era analog: the archive
@@ -11,9 +22,28 @@ import org.apache.spark.sql.SparkSession
   * sink at 100 TB accretes millions of KB-sized files and scan task
   * counts explode).
   *
-  * `compact` rewrites a parquet directory into ≈`targetFileBytes` files:
-  * the partition count derives from the directory's actual byte size, so
-  * the same call is right for 10 MB and 10 TB. Two swap disciplines:
+  * Both forms merge a directory's `part-` files into ≈`targetFileBytes`
+  * files with one of two mechanisms, chosen from the listing alone:
+  *
+  *  - *copy*, when the mean part file is at least one Parquet page
+  *    (`ParquetProperties.DEFAULT_PAGE_SIZE`, 1 MiB) and the directory
+  *    holds no other data entry: the part files, in name order, are
+  *    packed into contiguous runs of at most `targetFileBytes` (a larger
+  *    file is a run of its own), and one task per run appends the run's
+  *    row groups byte for byte (column, offset and column indexes and
+  *    bloom filters included) to `part-NNNNN.parquet`. No row is decoded.
+  *    The files of a run must share the Parquet schema and Spark's footer
+  *    keys ([[SparkFooterKeys]]); the task throws otherwise, so the job
+  *    fails before anything is published.
+  *  - *rewrite*, below that size: read, `coalesce`, write. Micro-batch
+  *    sinks leave row groups smaller than a page, which only re-encoding
+  *    repairs (a copy would also keep one footer entry per source file).
+  *
+  * Order: the copy keeps rows in part-file name order, so a range-sorted
+  * version (a `GlobalRank`/`q_sort_total` output) still reads back in
+  * rank order file by file. The rewrite does not keep that order.
+  *
+  * Two swap disciplines:
   *
   *  - [[compact]] swaps in place. Failure-safe at every step (the source
   *    is renamed aside, never deleted, until the compacted dir is live),
@@ -36,30 +66,93 @@ import org.apache.spark.sql.SparkSession
   *    an in-flight reader holding a just-stale resolution still completes
   *    its scan. This is the single-table form of a metastore location
   *    swap (reference promote protocol:
-  *    `/root/reference/src/mapred/org/apache/hadoop/mapred/FileOutputCommitter.java:34`).
+  *    `src/mapred/org/apache/hadoop/mapred/FileOutputCommitter.java:34`).
   */
 object Compaction {
+
+  /** Footer keys Spark reads back to decode a file's rows. A merged file
+    * carries one footer, so every file of a copy run must agree on them.
+    */
+  private val SparkFooterKeys: Seq[String] = Seq(
+    "org.apache.spark.sql.parquet.row.metadata", "org.apache.spark.legacyDateTime",
+    "org.apache.spark.legacyINT96", "org.apache.spark.timeZone")
+
+  private def isPart(s: FileStatus): Boolean = s.isFile && s.getPath.getName.startsWith("part-")
+
+  /** Merges the part files of `src` into a fresh `dst` (see the object
+    * doc for the copy/rewrite rule).
+    *
+    * @return (filesBefore, filesAfter) part-file counts.
+    */
+  private def mergeParts(spark: SparkSession, src: Path, dst: Path,
+                         targetFileBytes: Long): (Int, Int) = {
+    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listing = fs.listStatus(src)
+    val parts = listing.filter(isPart).sortBy(_.getPath.getName)
+    val bytes = parts.map(_.getLen).sum
+    // Spark's file index skips `_`/`.` names; any other entry (a partition
+    // dir, a foreign data file) is data the copy would not carry over
+    val onlyParts = listing.forall(s => isPart(s) || "_.".contains(s.getPath.getName.head))
+    fs.delete(dst, true)
+    if (parts.nonEmpty && onlyParts && bytes / parts.length >= ParquetProperties.DEFAULT_PAGE_SIZE) {
+      val runs = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[String]]
+      var fill = 0L
+      parts.foreach { p =>
+        if (runs.isEmpty || fill + p.getLen > targetFileBytes) {
+          runs += mutable.ArrayBuffer.empty[String]
+          fill = 0L
+        }
+        runs.last += p.getPath.toString
+        fill += p.getLen
+      }
+      fs.mkdirs(dst)
+      val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+      val out = dst.toString
+      spark.sparkContext.parallelize(runs.map(_.toSeq).zipWithIndex.toSeq, runs.length)
+        .foreach { case (run, i) => copyRowGroups(conf.value, run, new Path(out, f"part-$i%05d.parquet")) }
+    } else {
+      val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+      // coalesce, not repartition: compaction must not pay a shuffle
+      spark.read.parquet(src.toString).coalesce(n)
+        .write.mode("overwrite").parquet(dst.toString)
+    }
+    (parts.length, fs.listStatus(dst).count(isPart))
+  }
+
+  /** Appends the row groups of `files`, in order, to a new file `out`
+    * without decoding them. Runs inside a task: the output is deleted
+    * first, so a retried task overwrites its own partial file.
+    */
+  private def copyRowGroups(conf: Configuration, files: Seq[String], out: Path): Unit = {
+    val in = files.map(new Path(_))
+    val footerOnly = HadoopReadOptions.builder(conf)
+      .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+    val metas = in.map { p =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf), footerOnly)
+      try r.getFileMetaData finally r.close()
+    }
+    in.zip(metas).tail.foreach { case (p, m) =>
+      val differ = (if (m.getSchema != metas.head.getSchema) Seq("schema") else Nil) ++
+        SparkFooterKeys.filter(k =>
+          m.getKeyValueMetaData.get(k) != metas.head.getKeyValueMetaData.get(k))
+      if (differ.nonEmpty)
+        throw new IllegalStateException(
+          s"cannot merge $p into $out: its ${differ.mkString(", ")} differ from ${in.head}")
+    }
+    out.getFileSystem(conf).delete(out, false)
+    val rewriter = new ParquetRewriter(new RewriteOptions.Builder(conf, in.asJava, out).build())
+    try rewriter.processBlocks() finally rewriter.close()
+  }
 
   /** @return (filesBefore, filesAfter) parquet part-file counts. */
   def compact(spark: SparkSession, path: String,
               targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parts(p: Path): Array[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-    val before = parts(hPath)
-    val bytes = before.map(_.getLen).sum
-    val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val tmp = new Path(path + "_compacting")
     val old = new Path(path + "_old")
-    fs.delete(tmp, true)
     fs.delete(old, true)
-    // coalesce, not repartition: compaction must not pay a shuffle — it
-    // only concatenates row groups (ordering within files may change,
-    // which parquet table semantics permit)
-    spark.read.parquet(path).coalesce(n)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val after = parts(tmp).length
+    val counts = mergeParts(spark, hPath, tmp, targetFileBytes)
     // swap via rename-aside: the source is never deleted before the
     // compacted dir is live, so a crash at any point leaves the data
     // intact (at `path`, or at `path_old` + `path_compacting` — recovery
@@ -68,7 +161,7 @@ object Compaction {
     require(fs.rename(hPath, old), s"rename $hPath -> $old failed")
     require(fs.rename(tmp, hPath), s"rename $tmp -> $hPath failed")
     fs.delete(old, true)
-    (before.length, after)
+    counts
   }
 
   private val MarkerPrefix = "_committed_v="
@@ -156,9 +249,10 @@ object Compaction {
   /** Publish `df` as the next version of an initialized table root:
     * write `v=N+1`, create its commit marker, retire versions more than
     * `grace` generations behind. The general versioned-advance primitive
-    * — [[compactVersioned]] is this with a coalesce transform, and a CDC
-    * MERGE ([[graft.ops.Cdc.mergeVersioned]]) is this with an
-    * applyChanges transform. Same crash-safety as compactVersioned: a
+    * — [[compactVersioned]] advances the same way with merged files in
+    * place of a frame, and a CDC MERGE ([[graft.ops.Cdc.mergeVersioned]])
+    * is this with an applyChanges transform. Same crash-safety as
+    * compactVersioned: a
     * failure before the marker leaves readers on `v=N` and the orphan
     * dir is overwritten by the next publish.
     *
@@ -214,21 +308,11 @@ object Compaction {
                        targetFileBytes: Long = 128L * 1024 * 1024,
                        grace: Int = 1): (Int, Int) = {
     require(grace >= 1, s"grace must be >= 1, got $grace")
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parts(p: Path): Array[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
     val cur = currentVersion(spark, root)
-    val src = new Path(s"$root/v=$cur")
-    val before = parts(src)
-    val bytes = before.map(_.getLen).sum
-    val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val next = new Path(s"$root/v=${cur + 1}")
-    fs.delete(next, true)
-    spark.read.parquet(src.toString).coalesce(n)
-      .write.mode("overwrite").parquet(next.toString)
-    val after = parts(next).length
+    val counts = mergeParts(spark, new Path(s"$root/v=$cur"), new Path(s"$root/v=${cur + 1}"),
+      targetFileBytes)
     commitMarker(spark, root, cur + 1)
     retireOld(spark, root, cur, grace)
-    (before.length, after)
+    counts
   }
 }
