@@ -26,7 +26,7 @@ private[graft] object ColumnUtil {
     * by projecting it through `explode(array(...))` — a Generate.
     * CollapseProject re-inlines a plain alias into EVERY downstream
     * field extraction, and predicate pushdown substitutes the full
-    * expression tree into pushed filters (the r16 corpus-filter plan
+    * expression tree into pushed filters (a corpus-filter plan
     * audit found the fused signals struct inlined 4× per scanned row
     * this way — and HOF expressions are CodegenFallback, so no
     * whole-stage CSE rescues the copies). Neither rewrite crosses a

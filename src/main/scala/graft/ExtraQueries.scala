@@ -2434,7 +2434,7 @@ object ExtraQueries {
     // only ones that reach the shuffle. The oracle is the plain HAVING
     // query: the gate's no-false-negative guarantee is exactly what the
     // hash compare checks.
-    // AUTO-sized width (r11): a one-agg pre-pass (exact N + HLL distinct)
+    // AUTO-sized width: a one-agg pre-pass (exact N + HLL distinct)
     // derives width = min(8N/T, 16D), so the gate stays ~8x subcritical
     // at any scale without caller tuning — the knob whose mis-setting d7
     // measured as a superlinear 10x trend. The result is exact at ANY
@@ -2551,7 +2551,7 @@ object ExtraQueries {
       // NO adaptive-state-partition wrap here, deliberately: this stream
       // is stateless (foreachBatch only), and the per-file merge batches
       // are ordinary batch joins/writes that keep the session's
-      // parallelism — wrapping was measured 4.7 vs 4.3 s at sf0.1 (r16)
+      // parallelism — wrapping was measured 4.7 vs 4.3 s at sf0.1
       val q = stream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           if (!batch.isEmpty) {

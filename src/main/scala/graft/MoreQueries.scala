@@ -739,7 +739,7 @@ object MoreQueries {
     })),
 
     // The SQL surface's REDACTION + per-doc-repetitiveness arm
-    // (q_sql_pipeline's complement — r13 verdict Next #3): pii_scrub,
+    // (q_sql_pipeline's complement): pii_scrub,
     // repetition, entropy, the 64-bit SimHash bands and the
     // mixed-script count, all invoked from ONE spark.sql string over
     // registered graft_* functions. The scalar forms fold per row
@@ -980,12 +980,12 @@ object MoreQueries {
           AS quality_micros
       FROM lang ORDER BY doc_id"""))),
 
-    // Streaming NEAR-dup ingest (r14 verdict stretch): the continuous
+    // Streaming NEAR-dup ingest: the continuous
     // composition of the crawl front door with the incremental near-dup
     // pass — scan-side graft_minhash_bands keys into a
     // flatMapGroupsWithState keyed on the (band, bucket) with bounded
     // per-bucket state (StreamDedup.nearDupPairs). One AvailableNow run
-    // (maxFilesPerTrigger=1, r17) stages the q_dedup_incr_near corpus
+    // (maxFilesPerTrigger=1) stages the q_dedup_incr_near corpus
     // split as a STREAM — history docs in micro-batch 1, the new batch
     // (plus 40 almost-identical re-crawls) in micro-batch 2 — so the
     // emitted pairs must equal the batch incremental replay pair for
@@ -1026,7 +1026,7 @@ object MoreQueries {
         // staged files as two micro-batches (oldest mod-time first, the
         // d25b discipline) — the same batch boundaries the previous
         // two-run shape produced, minus a full stream start + checkpoint
-        // setup (~1.5 s of fixed machinery; r16 verdict #7).
+        // setup (~1.5 s of fixed machinery).
         // q_stream_restart separately certifies checkpoint resume.
         val stream = s.readStream
           .schema("doc_id BIGINT, text STRING")
@@ -1112,7 +1112,7 @@ object MoreQueries {
       ORDER BY batch_id, hist_id"""
     })),
 
-    // The streaming crawl FRONT DOOR (r15 verdict stretch): ingest →
+    // The streaming crawl FRONT DOOR: ingest →
     // exact-dedup → near-dup flag as ONE stream graph
     // (StreamDedup.frontDoor). Raw crawl pages (crawl_id, html) stream
     // through main-text extraction (the q_stream_ingest contract) into
@@ -1120,7 +1120,7 @@ object MoreQueries {
     // against the LSH bucket state: byte-identical pages map to their
     // canonical earliest arrival (exact), exact-survivors
     // Jaccard-verify against earlier micro-batches (near). One
-    // AvailableNow run (maxFilesPerTrigger=1, r17) stages history pages
+    // AvailableNow run (maxFilesPerTrigger=1) stages history pages
     // then a crawl batch carrying three planted classes — ' graftzz' near re-crawls,
     // byte-identical history re-crawls, intra-batch page dups — and the
     // sink folds to one verdict per crawled page. The oracle replays
@@ -1151,8 +1151,7 @@ object MoreQueries {
       def runOnce(): Unit = {
         // one AvailableNow run, two micro-batches via maxFilesPerTrigger
         // — same boundaries as the previous two-run shape, one stream
-        // start + checkpoint setup saved (r16 verdict #7; see
-        // q_stream_neardup)
+        // start + checkpoint setup saved (see q_stream_neardup)
         val es = graft.streaming.EventStreams
         es.withStagedState(s, stage) {
           val q = StreamDedup.frontDoor(

@@ -461,8 +461,8 @@ object PipelineQueries {
       FROM r WHERE rn = 1 ORDER BY train_id"""
     })),
 
-    // The near-dup candidate-pair pass ENTIRELY in spark.sql (r13
-    // verdict stretch #7 — the README's "near-dup from plain SQL"
+    // The near-dup candidate-pair pass ENTIRELY in spark.sql (the
+    // README's "near-dup from plain SQL"
     // claim, certified end-to-end): scalar LSH band keys → posexplode →
     // bucket self-join → distinct pairs → exact shingle-Jaccard verify,
     // one SQL string over registered graft_* functions. Arithmetic and
@@ -2040,7 +2040,7 @@ object PipelineQueries {
     // shape); dedup is a survivor-only md5 groupBy; output is 6 rows.
     "q_curation_funnel" -> (((s: SparkSession, dir: String) => {
       val ta = graft.text.TextAnalysis
-      // r16 (guide §2.4 + §4.4): the repetition stage uses the SCALAR
+      // The repetition stage uses the SCALAR
       // run-length fold over k3 survivors (when(k3, ...) — production
       // shape kept), pinned row-equal to the aggregate path by
       // ScalarTwinPropSpec; the previous shape paid a 3-gram explode

@@ -53,8 +53,8 @@ object Queries {
       // flip on FP representation.
       (s, dir) => {
         val d = t(s, dir, "documents")
-        // r16 (guide §2.4 — remove shuffles outright; §4.4 — stop the
-        // optimizer duplicating expensive expressions): all four gates
+        // Remove shuffles outright and stop the optimizer duplicating
+        // expensive expressions: all four gates
         // in ONE scan stage. Language/length/quality come from the
         // fused signals struct; the repetition gate uses the SCALAR
         // run-length fold (repetitionRatioScalar — pinned row-equal to
@@ -62,7 +62,7 @@ object Queries {
         // cheap gates' survivors only via the when() inside the struct.
         // The struct is built behind an explode(array(...)) GENERATE
         // BARRIER: predicate pushdown substitutes a projected alias's
-        // full expression tree into the pushed filter (the r16 plan
+        // full expression tree into the pushed filter (a plan
         // audit showed signals inlined 4× per scanned row and the
         // repetition fold running on EVERY row — HOF expressions are
         // CodegenFallback, so no whole-stage CSE rescues the copies),
@@ -1167,13 +1167,20 @@ object Queries {
     // ---- §2.5 sorts / partitioning -----------------------------------
 
     "q_sort_total" -> Q(
-      // global rank via range-partition + zipWithIndex (distributed),
-      // NOT row_number over an unpartitioned window (single task)
+      // global rank via range-partition + per-partition offsets
+      // (distributed), NOT row_number over an unpartitioned window (single
+      // task). It sorts on the DATE and formats `ship` after ranking: over
+      // Spark's DATE range (0001-01-01 to 9999-12-31) 'yyyy-MM-dd' is
+      // zero-padded and fixed-width, so date order is string order, and
+      // nulls sort first in both. A date's sort prefix decides almost every
+      // comparison; the string's 8-byte prefix 'yyyy-MM-' ties for a whole
+      // month. (l_orderkey, l_linenumber) keeps the key unique.
       (s, dir) => graft.ops.GlobalRank.withGlobalRank(
         t(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"),
-            date_format(col("l_shipdate"), "yyyy-MM-dd").as("ship")),
-        Seq(col("ship"), col("l_orderkey"), col("l_linenumber"))),
+            to_date(col("l_shipdate")).as("ship")),
+        Seq(col("ship"), col("l_orderkey"), col("l_linenumber")))
+        .withColumn("ship", date_format(col("ship"), "yyyy-MM-dd")),
       Some("""SELECT l_orderkey, l_linenumber, strftime(l_shipdate, '%Y-%m-%d') AS ship,
         (row_number() OVER (ORDER BY strftime(l_shipdate, '%Y-%m-%d'), l_orderkey, l_linenumber))::BIGINT AS rank
         FROM lineitem""")),
@@ -1544,7 +1551,7 @@ object Queries {
     "q_signals" -> Q(
       (s, dir) => t(s, dir, "documents")
         // explodeOnce: 3 field extractions would otherwise inline 3
-        // copies of the struct (r16, see ColumnUtil.explodeOnce)
+        // copies of the struct (see ColumnUtil.explodeOnce)
         .select(col("doc_id"),
           ColumnUtil.explodeOnce(TextAnalysis.signals(col("text"))).as("s"))
         .select(col("doc_id"), col("s.lang_pred").as("lang_pred"),

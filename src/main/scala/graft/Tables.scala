@@ -1,6 +1,12 @@
 package graft
 
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /** Loaders for the driver-provided testdata tables (TESTDATA.md).
   *
@@ -16,8 +22,61 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = parquet(spark, s"$sfDir/$name.parquet")
     if (name == "events") normalizeEvents(df) else df
+  }
+
+  /** `spark.read.parquet(path)` without Spark's schema job.
+    *
+    * With `mergeSchema` off, Spark infers a Parquet schema from one file
+    * (`_common_metadata`, else `_metadata`, else the first data file), but
+    * still launches a one-task job to read that footer. This reads the same
+    * footer on the driver and converts it with Spark's own
+    * `readSchemaFromFooter`, so Spark's row metadata, INT96 and
+    * `nanosAsLong` come out as the job would make them; the frame is then
+    * read with that schema. The listing stops at the first data file:
+    * HDFS and object stores list in path order, so that is the file Spark
+    * picks; Spark itself assumes all part files agree when it picks one.
+    * A directory entry (partition discovery), a path with no data file or
+    * `mergeSchema` on take the plain read.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.conf
+    val file = if (conf.isParquetSchemaMergingEnabled) None else schemaFile(spark, path)
+    file.fold(spark.read.parquet(path)) { f =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, spark.sessionState.newHadoopConf()),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        new Footer(f.getPath, footer), new ParquetToSparkSchemaConverter(conf))
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** The file Spark's non-merge rule reads the schema from, or None when
+    * the plain read should decide (see [[parquet]]).
+    */
+  private def schemaFile(spark: SparkSession, path: String): Option[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    // Spark's leaf-file filter: hidden and in-flight names are not data
+    def isData(e: FileStatus) = {
+      val n = e.getPath.getName
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
+    }
+    val root = try Some(fs.getFileStatus(p)) catch { case _: FileNotFoundException => None }
+    root.flatMap { st =>
+      if (st.isFile) Some(st)
+      else {
+        val it = fs.listStatusIterator(p)
+        var first: Option[FileStatus] = None
+        while (first.isEmpty && it.hasNext) first = Some(it.next()).filter(isData)
+        first.filter(_.isFile).map { data =>
+          Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
+            .map(new Path(p, _)).find(fs.exists).fold(data)(fs.getFileStatus)
+        }
+      }
+    }
   }
 
   /** Normalize `events` to expose BOTH an exact long-nanos `ts_ns` and a

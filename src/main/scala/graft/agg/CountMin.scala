@@ -50,7 +50,7 @@ object CountMin {
   val MaxDepth = 4
 
   /** Depth-`i` cell for a key: `xxhash64(i, key) mod width`. One cheap
-    * codegen'd 64-bit hash per (row, depth) — measured in r16 against
+    * codegen'd 64-bit hash per (row, depth) — measured against
     * the previous derivation (hex-slicing ONE md5 per row:
     * `conv(substring(md5(cast(key as string)), 8i+1, 8), 16, 10)`),
     * which paid a cast-to-string, an md5, and per-depth string slicing

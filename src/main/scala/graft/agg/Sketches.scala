@@ -38,7 +38,7 @@ object Sketches {
     * replays agree bit-for-bit).
     */
   def hash01(key: Column): Column =
-    // r17: md5PrefixLong(k,15)::double parses to the SAME correctly-
+    // md5PrefixLong(k,15)::double parses to the SAME correctly-
     // rounded IEEE double as the decimal-string cast it replaces
     graft.functions.HashExpressions.md5PrefixLong(key.cast("string"), 15)
       .cast("double") / lit(1152921504606846976.0) // 16^15

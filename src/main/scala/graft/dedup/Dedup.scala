@@ -45,13 +45,13 @@ object Dedup {
     * and inlined copies would re-split the text per view.
     */
   def shingles(text: Column, n: Int = 3): Column =
-    // r17 (guide §4): codegen construction — one primitive byte pass per
+    // codegen construction — one primitive byte pass per
     // row ([[graft.functions.Shingles]]) instead of the interpreted
     // zip_with/filter HOF fold retained below as [[shinglesHof]]
     // (HashExprSpec pins the two element-for-element, nulls included)
     graft.functions.HashExpressions.shingles(text, n)
 
-  /** The pre-r17 HOF construction of [[shingles]] — the differential
+  /** The HOF construction of [[shingles]] — the differential
     * twin HashExprSpec replays against the codegen expression.
     *
     * Built by zipping n shifted views of the token array — O(tokens)
@@ -189,7 +189,7 @@ object Dedup {
     // cand re-enters FOUR subplans (both candDocs sides, prefixedPairs,
     // the final join-back) and carries the entire two-sided LSH pipeline
     // under it — without a cut the plan re-executes the md5 signature
-    // passes per re-entry (the r15 plan audit counted 24 document scans;
+    // passes per re-entry (a plan audit counted 24 document scans;
     // ReuseExchange does not fire across the differing projections).
     // cand is small by construction — band-collision pairs only, the
     // history side maxBucket-guarded — so one eager local checkpoint
@@ -230,7 +230,7 @@ object Dedup {
     * reproducible from any engine (DuckDB: `('0x'||substr(md5(s),1,15))::BIGINT`).
     */
   def shingleHash(sh: Column): Column =
-    // r17 (guide §4): the digest nibbles ARE the hex digits — read the
+    // the digest nibbles ARE the hex digits — read the
     // first 15 directly ([[graft.functions.Md5PrefixLong]]) instead of
     // rendering the 32-char hex string and conv-parsing it back
     // (value-identical for 15 digits; HashExprSpec pins it against the
@@ -246,7 +246,7 @@ object Dedup {
     */
   def minhashSignatures(docs: DataFrame, numPerms: Int = 8, shingleN: Int = 3,
                         text: String = "text", id: String = "doc_id"): DataFrame = {
-    // r17: shingle + hash in ONE codegen pass per row — the exploded
+    // shingle + hash in ONE codegen pass per row — the exploded
     // rows carry the 60-bit hash long instead of the shingle string
     // (same values: md5-prefix-15 of each distinct shingle), so the
     // string array is never materialized as Catalyst values
@@ -287,7 +287,7 @@ object Dedup {
         // The k minima come from ONE codegen'd pass
         // ([[graft.functions.MinhashMins]]) — previously k interpreted
         // `array_min(transform(...))` passes, k closure dispatches per
-        // shingle (r16; same affine family, bit-identical signatures).
+        // shingle (same affine family, bit-identical signatures).
         when(size(xs) > 0,
           graft.functions.MinhashExpressions.minhashMins(xs, numPerms)))
 
@@ -306,8 +306,8 @@ object Dedup {
         text, shingleN, distinct = true),
       numPerms, rowsPerBand)
 
-  /** [[minhashBandKeys]] over a PRE-COMPUTED 60-bit shingle-hash array
-    * (r16): the streaming near-dup scan projects BOTH the verify set
+  /** [[minhashBandKeys]] over a PRE-COMPUTED 60-bit shingle-hash array.
+    * The streaming near-dup scan projects BOTH the verify set
     * (sorted distinct hashes) and the band keys from one document, and
     * as separate output columns each re-tokenized and re-md5'd the text
     * — this variant lets one bound hash array feed both (the
@@ -363,7 +363,7 @@ object Dedup {
     // explode + per-shingle md5 + partial k-min agg) sits below an
     // exchange that AQE's stage cache deduplicates at runtime — only the
     // cheap post-shuffle band/window stage re-executes on the broadcast
-    // side. A lazy localCheckpoint here was tried (r16) and measured a
+    // side. A lazy localCheckpoint here was tried and measured a
     // consistent LOSS at sf0.1 (q_lsh_tuned_sweep 4.4 → 5.5 s,
     // q_lsh_precision 1.7 → 2.2, q_ngram_jaccard 1.3 → 1.9,
     // q_quality_dup_decile 2.5 → 3.2: the materialization barrier costs
@@ -565,7 +565,7 @@ object Dedup {
     // materialize the edge list once — it re-enters every propagation
     // iteration AND the convergence check, and recomputing the upstream
     // LSH pipeline per iteration would dominate the whole job. The
-    // two-sided union is DELIBERATE (r16): an explode(array(fwd, rev))
+    // two-sided union is DELIBERATE: an explode(array(fwd, rev))
     // single-pass form was measured and rejected — the union's arms are
     // independent stages that overlap on idle capacity while AQE stage
     // reuse already dedups the candidate join's shuffle stages, so the
@@ -844,7 +844,7 @@ object Dedup {
     * [[winnowFromHashes]] — see that method's scaladoc for why.
     */
   def shingleHashes(text: Column, k: Int = 3): Column =
-    // r17: one codegen pass (positional, non-distinct) — see shingles()
+    // one codegen pass (positional, non-distinct) — see shingles()
     graft.functions.HashExpressions.shingleHashes(text, k, distinct = false)
 
   /** Winnowing document fingerprints (Schleimer et al., SIGMOD'03 — the
@@ -887,7 +887,7 @@ object Dedup {
     * engine can reproduce and compare via Hamming distance on characters.
     */
   def simhash16(docs: DataFrame, text: String = "text", id: String = "doc_id"): DataFrame = {
-    // r17 (guide §4, the [[simhashBands]] treatment): the vote for digit
+    // the [[simhashBands]] treatment: the vote for digit
     // j was `substring(h, j+1, 1).isin('8'..'f')` — 16 one-char string
     // slices + set probes per TOKEN row over the rendered md5 hex. The
     // digits now come off the DIGEST as 44-bit long chunks
@@ -966,8 +966,8 @@ object Dedup {
     * per-row folds at equal output).
     */
   def simhash64Array(text: Column): Column =
-    // r16 codegen rewrite ([[graft.functions.SimhashBands]], guide §4 /
-    // §1.2 per-task work): one primitive pass over the raw md5 DIGEST
+    // codegen ([[graft.functions.SimhashBands]], per-task work): one
+    // primitive pass over the raw md5 DIGEST
     // bytes per distinct token — no hex string, no interpreted HOF
     // fold. Identical digit/bit layout (hex digit j is nibble j of the
     // digest), so the band ints — and the DuckDB replay — are
@@ -981,12 +981,12 @@ object Dedup {
                            text: String, id: String): DataFrame = {
     require(nBands >= 1 && nBands <= 8, s"md5 has 32 hex digits: nBands <= 8, got $nBands")
     val nd = 4 * nBands
-    // r16 hot-path rewrite (guide §4 / §1.2 per-task work): the vote for
+    // hot path (per-task work): the vote for
     // (digit j, bit b) used to be `substring(h, j+1, 1).isin(<8 hex
     // chars>)` — 4·nd string slices + set probes per TOKEN row, each
     // allocating a 1-char string. The md5 hex prefix is parsed ONCE per
     // row into 11-digit (44-bit) long chunks, and each vote is a
-    // codegen'd shift/mask on a long. r17: the chunks come straight off
+    // codegen'd shift/mask on a long. The chunks come straight off
     // the md5 DIGEST bytes ([[graft.functions.Md5Chunks]]) — no 32-char
     // hex render, no substring slices, no conv re-parse per token row
     // (HashExprSpec pins chunk ≡ conv(substring(md5(t),…),16,10)).
@@ -1269,7 +1269,7 @@ object Dedup {
       }
     windows
       .select(col("doc_id"), col("w.i").as("i"), col("w.seg").as("seg"))
-      // r17 (guide §2.3, narrower types): the window hash is ONLY ever a
+      // narrower types: the window hash is ONLY ever a
       // grouping key (shared-flag window partition, cut-set groupBy), and
       // at stride 1 it rides the operator's dominant exchange on every
       // window row — the engine's standard 60-bit md5-prefix long is 8
@@ -1294,7 +1294,7 @@ object Dedup {
     * over the hash (`min(doc) ≠ max(doc)` ⟺ ≥2 distinct docs, exactly
     * `countDistinct(doc_id) > 1` for non-null ids).
     *
-    * r16 plan fix (guide §2.4): the previous shape was a groupBy(h)
+    * Plan shape: a groupBy(h)
     * aggregate joined back to the window rows — which planned the whole
     * window-extraction subtree TWICE (charWindows' flatMap/explode/md5
     * has no reusable exchange between the two consumers) and paid two

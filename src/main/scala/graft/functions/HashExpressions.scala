@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the md5-keyed dedup substrate
-  * (whole-stage codegen) — r17, guide §4 / §1.2 per-task work.
+  * (whole-stage codegen) — per-task work.
   *
   * Two interpreted costs sat on the engine's hottest kernel:
   *
@@ -36,8 +36,7 @@ object HashHelper {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
-  /** Thread-cached digest (the r16 advisor's SimhashHelper note applied
-    * here from birth): provider lookup + instance allocation per row is
+  /** Thread-cached digest: provider lookup + instance allocation per row is
     * measurable on wide scans; reset() makes reuse safe per thread.
     */
   def md5(): java.security.MessageDigest = {

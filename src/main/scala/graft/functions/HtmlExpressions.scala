@@ -7,8 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the HTML extraction operators
-  * (r17, guide §4; r16 verdict #4).
+/** Native Catalyst expressions for the HTML extraction operators.
   *
   * The Column composition in [[graft.text.Html]] evaluated per page:
   * 6 whole-page regex passes, a split, then PER BLOCK an interpreted

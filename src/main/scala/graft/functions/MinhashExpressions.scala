@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 
 /** Native Catalyst MinHash-minima expression (whole-stage codegen).
   *
-  * Why (r16, guide §4 / §1.2 per-task work): the scalar
+  * Why (per-task work): the scalar
   * [[graft.dedup.Dedup.minhashSigArray]] computed its k permutation
   * minima as k separate `array_min(transform(xs, v => (v·a_i+b_i) mod P))`
   * calls — higher-order-function lambdas evaluate INTERPRETED per

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 
 /** Native Catalyst SimHash-band expression (whole-stage codegen).
   *
-  * Why (r16, guide §4 / §1.2 per-task work): the scalar
+  * Why (per-task work): the scalar
   * [[graft.dedup.Dedup.simhash64Array]] folded per-token votes through
   * nested higher-order functions (`aggregate` over `zip_with` over a
   * 16-element literal array per token per band) — HOF lambdas evaluate
@@ -35,7 +35,7 @@ object SimhashHelper {
     val n = tokens.numElements()
     var seen = false
     val votes = new Array[Int](nd * 4)
-    // thread-cached digest (r16 advisor): a fresh getInstance per row
+    // thread-cached digest: a fresh getInstance per row
     // pays the provider lookup + allocation on every scanned row
     val md = HashHelper.md5()
     var i = 0

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native Catalyst expression for the fused corpus-signals struct
   * (whole-stage codegen).
   *
-  * Why (r17, guide §4 / §1.2 per-task work; r16 verdict #3): the fused
+  * Why (per-task work): the fused
   * [[graft.text.TextAnalysis.signals]] struct was composed from
   * higher-order functions — `filter(split(text))` token arrays, one
   * `filter`+`array_contains` probe per language plus one for the union

@@ -136,7 +136,7 @@ object CentroidHelper {
     var bestSim = Double.NegativeInfinity
     var bestNeg = Int.MinValue
     val k = cents.numElements()
-    // r17 (r16 advisor): an empty centroid table would silently return
+    // an empty centroid table would silently return
     // -Int.MinValue (overflowing back to Int.MinValue) as a sentinel
     // cell id — fail loudly instead; buildIvfIndex never passes empty
     // centroids, but the expression is reachable via SQL composition
@@ -170,8 +170,8 @@ object CentroidHelper {
 
 /** `nearest_centroid(emb, cents)` → int cell id. Replaces the
   * interpreted `aggregate()`-over-broadcast-centroids fold in
-  * [[graft.sim.Similarity.buildIvfIndex]]'s large-k path (r16, guide
-  * §4): the fold paid a closure dispatch + a struct allocation + a
+  * [[graft.sim.Similarity.buildIvfIndex]]'s large-k path: the fold
+  * paid a closure dispatch + a struct allocation + a
   * struct comparison per centroid per row; this is one primitive
   * k·dim loop inside whole-stage codegen. Tie-break and zero-norm
   * semantics identical to the fold (SimilaritySpec pins the two paths

@@ -55,13 +55,13 @@ object PageRank {
   def pageRankTracked(edgesRaw: DataFrame, srcCol: String, dstCol: String,
                       iters: Int = 3, damping: Double = 0.85): Checkpoints.Truncated = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    // r17 setup slimming (guide §2.3/§5; the d8 cold-protocol phase
-    // attribution showed the SETUP checkpoint is ~60% of the 10x wall —
-    // iterations are 1–3 s each): the r16 shape attached the out-degree
-    // to every edge row via a window over src — a SECOND full exchange
+    // Setup slimming (the d8 cold-protocol phase attribution showed the
+    // SETUP checkpoint is ~60% of the 10x wall — iterations are 1–3 s
+    // each): an earlier shape attached the out-degree to every edge row
+    // via a window over src — a SECOND full exchange
     // of the edge list plus a per-partition sort, and a 3-column
     // checkpoint — yet the iterations only ever read (src, dst) from
-    // the edge side (r16 moved r/deg to the rank side). Checkpoint the
+    // the edge side (r/deg lives on the rank side). Checkpoint the
     // DEDUPED 2-column edge list (one map-side-combined (src,dst)
     // exchange, no window, no sort, 2/3 the materialized bytes) and
     // derive the per-src degree from the checkpointed edges with a
@@ -98,7 +98,7 @@ object PageRank {
       .select(col("node"), col("deg"), round(lit(1.0) / col("_n"), 9).as("r"))
     var releasePrev: () => Unit = () => ()
     for (it <- 1 to iters) {
-      // r16 iteration shape (guide §3.1 + §2.3): shuffled-hash, not
+      // Iteration shape: shuffled-hash, not
       // sort-merge — the hint removes the per-iteration re-sort of the
       // edge list that SMJ would pay (the build side is the rank table,
       // bounded by node count); and the per-edge `r/deg` division moves

@@ -11,8 +11,12 @@ import org.apache.spark.sql.{Column, DataFrame}
   * one task ranks everything, which cannot scale. This operator keeps the
   * computation distributed: range-repartition on the sort key (Spark
   * samples split points, exactly like InputSampler), sort within
-  * partitions, then `zipWithIndex` (one lightweight count job for the
-  * per-partition offsets) assigns contiguous global ranks.
+  * partitions, and tag each row with its partition and local position.
+  * The job that materializes the sorted checkpoint also returns each
+  * partition's row count, so the offsets that make the ranks contiguous
+  * cost no job of their own, as each reference reducer counted its own
+  * positions. A ranked write runs four jobs: the range sampler, the
+  * exchange's map side, the sort and the write (GlobalRankSpec).
   *
   * The sort key must be a unique total order for ranks to be
   * deterministic (add an id tie-break, as the reference's total sorts
@@ -47,36 +51,34 @@ object GlobalRank {
         // monotonically_increasing_id encodes (partition << 33) + local row
         // index in iteration (= sorted) order — local position without
         // leaving codegen (an rdd.zipWithIndex would deserialize every row)
-        .withColumn("_mid", monotonically_increasing_id())
-        .withColumn("_pid", spark_partition_id()),
+        .withColumn("_mid", monotonically_increasing_id()),
       eager = false)
     val sorted = tracked.df
     // per-partition row counts → cumulative start offsets (tiny driver data,
     // the TotalOrderPartitioner "partition file" analog)
-    val counts = sorted.groupBy("_pid").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+    val counts = partitionTotals(sorted, lit(0L)).map { case (pid, rows, _) => pid -> rows }
     val offsets = counts.scanLeft(0L) { case (acc, (_, c)) => acc + c }
+    val tagged = sorted.withColumn("_pid", shiftright(col("_mid"), 33).cast("int"))
     val localRank = col("_mid") - shiftleft(col("_pid").cast("long"), 33) + 1
     val ranked =
       if (counts.length <= maxWhenChain) {
         // small partition counts: a when-chain literal keeps the whole rank
         // expression inside codegen (no join at all)
-        val offsetMap = counts.map(_._1).zip(offsets).toMap
-        val offsetCol = counts.foldLeft(lit(0L)) { case (acc, (pid, _)) =>
-          when(col("_pid") === pid, lit(offsetMap(pid))).otherwise(acc)
+        val offsetCol = counts.map(_._1).zip(offsets).foldLeft(lit(0L)) { case (acc, (pid, off)) =>
+          when(col("_pid") === pid, lit(off)).otherwise(acc)
         }
-        sorted.withColumn(rankCol, offsetCol + localRank)
+        tagged.withColumn(rankCol, offsetCol + localRank)
       } else {
         // large partition counts: a when-chain would blow up codegen
         // (O(partitions) nested CASE); broadcast-join the tiny offsets
         // table instead. Correctness does not depend on the join strategy
         // or row order: ranks are pure functions of the materialized
-        // _mid/_pid columns, so any physical plan yields the same ranks
+        // _mid column, so any physical plan yields the same ranks
         val spark = df.sparkSession
         import spark.implicits._
         val offsetsDf = broadcast(
           counts.map(_._1).zip(offsets).toSeq.toDF("_pid", "_offset"))
-        sorted.join(offsetsDf, "_pid")
+        tagged.join(offsetsDf, "_pid")
           .withColumn(rankCol, col("_offset") + localRank)
           .drop("_offset")
       }
@@ -87,6 +89,21 @@ object GlobalRank {
     * instead of a codegen'd when-chain.
     */
   val MaxWhenChainPartitions: Int = 256
+
+  /** (partition index, rows, sum of `weight` as a long with nulls as 0) for
+    * each non-empty partition of `sorted`. Run on the checkpointed frame,
+    * this job is the one that materializes a lazy checkpoint, so the
+    * totals cost no job of their own. Partition indexes are those the
+    * rows were tagged with before the checkpoint: the scan is narrow.
+    */
+  private def partitionTotals(sorted: DataFrame, weight: Column): Array[(Int, Long, Long)] =
+    sorted.select(weight.cast("long")).queryExecution.toRdd
+      .mapPartitionsWithIndex { (i, rows) =>
+        var n, s = 0L
+        rows.foreach { r => n += 1; if (!r.isNullAt(0)) s += r.getLong(0) }
+        Iterator((i, n, s))
+      }
+      .collect().filter(_._2 > 0)
 
   /** [[withGlobalCumSumTracked]] without the release handle — same
     * session-hygiene caveat as [[withGlobalRank]].
@@ -124,10 +141,10 @@ object GlobalRank {
       eager = false)
     val sorted = tracked.df
     val w = col(weightCol).cast("long")
-    val sums = sorted.groupBy("_pid").agg(sum(w).as("_s"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    // empty partitions simply don't appear: they contribute no weight and
-    // no rows, so skipping them keeps the offsets aligned
+    // empty partitions are left out: they contribute no weight and no
+    // rows, so skipping them keeps the offsets aligned; a null weight
+    // counts 0, as the running sum below treats it
+    val sums = partitionTotals(sorted, w).map { case (pid, _, s) => pid -> s }
     val offsets = sums.scanLeft(0L) { case (acc, (_, s)) => acc + s }
     val win = Window.partitionBy("_pid").orderBy(sortCols: _*)
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -30,7 +30,7 @@ object Sampling {
     * exactly one place.
     */
   def hashBits32(key: Column): Column =
-    // r17 (guide §4): digest nibbles read directly — value-identical to
+    // digest nibbles read directly — value-identical to
     // conv(substring(md5(k),1,8),16,10)::long, see HashExprSpec
     graft.functions.HashExpressions.md5PrefixLong(key.cast("string"), 8)
 

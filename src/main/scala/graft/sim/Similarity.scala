@@ -359,8 +359,8 @@ object Similarity {
         Seq(centroids.map { case (cid, v) => (cid, v) }).toDF("_cents"))
       // (sim, negcid) running max over the broadcast centroid array —
       // same comparison the literal path's greatest performs, so the two
-      // paths tie-break identically on equal similarities. r16 (guide
-      // §4): the max runs as the codegen'd NearestCentroid primitive
+      // paths tie-break identically on equal similarities. The max runs
+      // as the codegen'd NearestCentroid primitive
       // loop — the previous `aggregate()` fold paid an interpreted
       // closure dispatch + struct allocation + struct compare per
       // centroid per row (measured 2.6× on the k=160 d5k assignment);

@@ -355,7 +355,7 @@ object EventStreams {
   }
 
   private def stagedBytes(spark: SparkSession, stagedDirs: Seq[String]): Long = {
-    // r17 (r16 advisor): size through Hadoop's FileSystem so hdfs://,
+    // Size through Hadoop's FileSystem so hdfs://,
     // s3a:// and other non-local staging URIs are measured instead of
     // silently totalling 0 bytes (which pinned ONE state partition at
     // deployment scale); a mistyped/missing dir still degrades to the
@@ -419,7 +419,7 @@ object EventStreams {
     * the override must bracket `.start()`; batch work outside the
     * bracket keeps the session default + AQE.
     *
-    * NOT reentrant/concurrency-safe (r16 advisor): the bracket mutates
+    * NOT reentrant/concurrency-safe: the bracket mutates
     * a session-global conf, so a concurrent query planned on the same
     * session inside the bracket inherits the pinned count, and nested
     * brackets restore last-writer-wins. Verify/Bench run queries

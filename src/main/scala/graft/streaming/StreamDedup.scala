@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import graft.dedup.Dedup
 
-/** Streaming NEAR-dup ingest (r14 verdict stretch): the crawl front
+/** Streaming NEAR-dup ingest: the crawl front
   * door's stateless ingest composed with the batch-incremental near-dup
   * pass, so a CONTINUOUS ingest dedups in-stream instead of staging
   * batches for `Dedup.incrementalNearDups` replays.
@@ -98,7 +98,7 @@ object StreamDedup {
     val spark = docs.sparkSession
     import spark.implicits._
     // ONE shingle-hash pass feeds both the verify set and the band keys
-    // (r16, guide §4 per-task work): as two separate output columns each
+    // (per-task work): as two separate output columns each
     // re-tokenized and re-md5'd the document — the dominant scan cost.
     // The fused struct rides an explodeOnce Generate barrier so field
     // extraction cannot re-inline it (see ColumnUtil.explodeOnce).
@@ -170,7 +170,7 @@ object StreamDedup {
   case class FrontDoorHit(new_id: Long, dup_id: Long, jaccard: Double,
                           exact: Boolean)
 
-  /** The streaming crawl FRONT DOOR (r15 verdict stretch): ingest →
+  /** The streaming crawl FRONT DOOR: ingest →
     * exact-dedup → near-dup flag as ONE stream graph. Input is the raw
     * crawl surface `(crawl_id, html)`; the stateless ingest stage
     * extracts main text (the q_stream_ingest contract —
@@ -217,8 +217,8 @@ object StreamDedup {
                 maxBucket: Int = 1000000): Dataset[FrontDoorHit] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    // ONE htmlMainText extraction and ONE shingle-hash pass per page
-    // (r16): the previous two-step projection let CollapseProject inline
+    // ONE htmlMainText extraction and ONE shingle-hash pass per page:
+    // a two-step projection let CollapseProject inline
     // the extraction into every consumer (md5, verify set, band keys —
     // 3 full extractions/row) and hashed the shingles twice. The fused
     // struct binds text then the hash array once, behind an explodeOnce
@@ -282,7 +282,7 @@ object StreamDedup {
   }
 
   /** [[nearDupPairs]] with an EVENT-TIME TTL on the bucket state — the
-    * true-continuous-ingest form (r15 verdict #5). [[nearDupPairs]]'
+    * true-continuous-ingest form. [[nearDupPairs]]'
     * state is bounded per bucket but never evicted globally, so a crawl
     * ingest that runs for months accumulates state ∝ corpus shingle
     * mass. Here every state doc carries its event time and ages out of
@@ -319,7 +319,7 @@ object StreamDedup {
     // normalize FIRST, watermark the normalized column, then only
     // project the attribute through: the watermark tag lives in the
     // column attribute's metadata and must reach the stateful operator
-    // same one-pass fused keying as [[nearDupPairs]] (r16)
+    // same one-pass fused keying as [[nearDupPairs]]
     val keyed = graft.ColumnUtil.bindOnce(
       graft.functions.HashExpressions.shingleHashes(
         col("text"), shingleN, distinct = true), hs =>

@@ -130,7 +130,7 @@ object Classifier {
       docs.select(col(id), col(labelCol).as("_lbl"),
           explode(TextAnalysis.tokenize(col(text))).as("w"))
         .select(col(id), col("_lbl"),
-          // r17 (guide §4; r16 verdict #5): digest nibbles → bucket
+          // digest nibbles → bucket
           // directly, skipping the 32-char hex render + conv parse per
           // token (value-identical — HashExprSpec)
           (graft.functions.HashExpressions.md5PrefixLong(col("w"), 15)

@@ -165,7 +165,7 @@ object Html {
 
   /** All text of the page, one line per block, boilerplate KEPT.
     *
-    * r17 (guide §4; r16 verdict #4): computed by the codegen
+    * Computed by the codegen
     * [[graft.functions.HtmlText]] expression — the SAME pattern table
     * (this object's constants, referenced not copied) through the SAME
     * java.util.regex engine, one pass and one String materialization
@@ -176,7 +176,7 @@ object Html {
   def htmlExtract(html: Column): Column =
     graft.functions.HtmlExpressions.htmlExtract(html)
 
-  /** The pre-r17 Column composition of [[htmlExtract]] — the
+  /** The Column composition of [[htmlExtract]] — the
     * differential twin HtmlExprSpec replays against the expression.
     */
   private[graft] def htmlExtractHof(html: Column): Column = {
@@ -188,12 +188,12 @@ object Html {
   /** Content text of the page: link-dense blocks (nav/footer/sidebar)
     * dropped, survivors joined by newline, entities decoded once at the
     * end (the density test runs on raw text so thresholds are
-    * markup-stable). Codegen since r17 — see [[htmlExtract]].
+    * markup-stable). Codegen — see [[htmlExtract]].
     */
   def htmlMainText(html: Column): Column =
     graft.functions.HtmlExpressions.htmlMainText(html)
 
-  /** The pre-r17 Column composition of [[htmlMainText]] — the
+  /** The Column composition of [[htmlMainText]] — the
     * differential twin. The keep decision and the survivor text come
     * from ONE [[blockInfo]] evaluation per block.
     */

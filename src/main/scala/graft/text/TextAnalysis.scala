@@ -453,7 +453,7 @@ object TextAnalysis {
     * [[langId]]/[[tokenCount]]/[[qualityScore]] (the per-signal DuckDB
     * oracles stay valid for the fused form).
     *
-    * r17 (guide §4; r16 verdict #3): computed by the codegen
+    * Computed by the codegen
     * [[graft.functions.TextSignals]] expression — one primitive pass
     * over the document bytes instead of the interpreted-HOF composition
     * retained below as [[signalsHof]] (SignalsPropSpec pins the two
@@ -463,7 +463,7 @@ object TextAnalysis {
   def signals(text: Column): Column =
     graft.functions.TextSignalsExpressions.textSignals(text)
 
-  /** The pre-r17 higher-order-function composition of [[signals]] — the
+  /** The higher-order-function composition of [[signals]] — the
     * differential twin SignalsPropSpec replays against the codegen
     * expression. The raw and lowered token arrays bind once per row —
     * the separate functions each re-split the text (~8 splits + 5

@@ -15,7 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - `explain` prints each plan's `explain("formatted")`.
   *  - `time` warms up as Bench does (every table once into the noop
   *    sink), then makes three noop-sink runs per arg, each preceded by
-  *    [[Bench.hygiene]], and prints every reading and their minimum.
+  *    [[Bench.hygiene]], and prints every reading with the number of
+  *    Spark jobs it started, and their minimum.
   *
   * The session is [[GraftSession.builder]]'s host-sized default.
   */
@@ -50,11 +51,12 @@ object Probe {
       } else {
         // Bench's warm-up: page cache + JIT out of the measurement
         Tables.names.foreach(t => Bench.exec(Tables.load(spark, sfDir, t)))
+        val jobs = JobCounter.attach(spark)
         targets.foreach { a =>
           val runs = (1 to Runs).map { i =>
             Bench.hygiene(spark)
-            val t = Bench.time(Bench.exec(resolve(spark, sfDir, a)))
-            println(f"${label(a)}%-24s run$i $t%.3f s")
+            val (t, n) = jobs.count(Bench.time(Bench.exec(resolve(spark, sfDir, a))))
+            println(f"${label(a)}%-24s run$i $t%.3f s $n%d jobs")
             t
           }
           println(f"${label(a)}%-24s min  ${runs.min}%.3f s")

@@ -1,10 +1,60 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class GlobalRankSpec extends SparkSpec {
+  private lazy val jobs = graft.tools.JobCounter.attach(spark)
+
+  /** `cols`-ordered ranks of `df` against a single-partition row_number. */
+  private def assertRanksMatchRowNumber(df: DataFrame, cols: Seq[Column], key: String): Unit = {
+    val got = GlobalRank.withGlobalRank(df, cols).select(key, "rank")
+      .collect().map(r => r.get(0) -> r.getLong(1)).toMap
+    val want = df.withColumn("rank", row_number().over(Window.orderBy(cols: _*)).cast("long"))
+      .select(key, "rank").collect().map(r => r.get(0) -> r.getLong(1)).toMap
+    assert(got.values.toSeq.sorted == (1L to df.count()))
+    assert(got == want)
+  }
+
+  test("a ranked write runs 4 jobs: no job only counts partition rows") {
+    import spark.implicits._
+    // the range sampler, the range exchange's map side, the sort that
+    // materializes the checkpoint and returns the counts, and the write
+    val df = (1 to 400).map(i => (i % 7, i.toLong)).toDF("g", "id")
+    val (_, n) = jobs.count(GlobalRank.withGlobalRank(df, Seq(col("g"), col("id")))
+      .write.format("noop").mode("overwrite").save())
+    assert(n == 4)
+  }
+
+  test("ranks equal row_number with 3 leading keys over 8 partitions, and on an empty frame") {
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "8")
+    val df = (1 to 60).map(i => (Seq("a", "b", "c")(i % 3), i.toLong)).toDF("lead", "id")
+      .repartition(5)
+    assertRanksMatchRowNumber(df, Seq(col("lead").desc, col("id")), "id")
+    assert(GlobalRank.withGlobalRank(df.limit(0), Seq(col("id"))).count() == 0)
+  }
+
+  test("ranks equal row_number under reliable checkpoints") {
+    import spark.implicits._
+    spark.sparkContext.setCheckpointDir("/tmp/graft_test/rank_reliable_ckpt")
+    spark.conf.set(Checkpoints.ReliableKey, "true")
+    try {
+      val df = (1 to 90).map(i => (i % 4, i.toLong)).toDF("lead", "id")
+      assertRanksMatchRowNumber(df, Seq(col("lead"), col("id").desc), "id")
+    } finally spark.conf.unset(Checkpoints.ReliableKey)
+  }
+
+  test("withGlobalCumSum counts a null weight as 0, also over an all-null partition") {
+    import spark.implicits._
+    val rows = (1 to 80).map(i => (i.toLong, if (i <= 30) None else Some(i.toLong)))
+    val got = GlobalRank.withGlobalCumSum(rows.toDF("k", "w"), Seq(col("k")), "w")
+      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val want = rows.map(_._1).zip(rows.scanLeft(0L)(_ + _._2.getOrElse(0L))).toMap
+    assert(got == want)
+  }
 
   test("distributed global rank equals single-partition row_number") {
     val li = graft.Tables.load(spark, sfDir, "lineitem")
