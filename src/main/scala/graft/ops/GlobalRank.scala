@@ -9,14 +9,37 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   * `row_number() OVER (ORDER BY ...)` forces a SinglePartition exchange —
   * one task ranks everything, which cannot scale. This operator keeps the
-  * computation distributed: range-repartition on the sort key (Spark
-  * samples split points, exactly like InputSampler), sort within
-  * partitions, and tag each row with its partition and local position.
-  * The job that materializes the sorted checkpoint also returns each
-  * partition's row count, so the offsets that make the ranks contiguous
-  * cost no job of their own, as each reference reducer counted its own
-  * positions. A ranked write runs four jobs: the range sampler, the
-  * exchange's map side, the sort and the write (GlobalRankSpec).
+  * computation distributed: range-repartition on the sort key, sort
+  * within partitions, and tag each row with its partition and local
+  * position. The job that materializes the sorted checkpoint also returns
+  * each partition's row count, so the offsets that make the ranks
+  * contiguous cost no job of their own, as each reference reducer counted
+  * its own positions. A ranked write runs four jobs: the sampling pass
+  * (or Spark's range sampler), the exchange's map side, the sort and the
+  * write (GlobalRankSpec).
+  *
+  * When every sort key is integral, boolean, date or timestamp, the order
+  * rides one packed `LONG` ([[PackedKey]]), as the reference's reducers
+  * compared raw key bytes:
+  *  - its own sampling pass (one job, in place of Spark's range sampler)
+  *    reads each key's exact min, max and null count and a reservoir
+  *    sample of the keys;
+  *  - each key gets a bit field of its exact range (plus a null slot when
+  *    it holds nulls), most significant first; if the fields fit in 63
+  *    bits the packed value is non-negative and its order is the tuple
+  *    order;
+  *  - the split points are weighted quantiles of the packed sample, and
+  *    `repartitionById` routes each row by a binary search over them
+  *    ([[graft.functions.RangeBucket]]) — the partition file lookup;
+  *  - the sort is Spark's radix sort, which runs only on a single key its
+  *    8-byte prefix holds whole;
+  *  - key columns of `df` travel as the packed key alone through the
+  *    shuffle and the checkpoint, and decode exactly after it.
+  * The ranked frame's schema, rows, ranks and file order are those of the
+  * range-exchange path. Any other key type, a nondeterministic input, or
+  * an input that itself shuffles takes the range exchange without the
+  * pass; keys that measure wider than 63 bits take it after the pass,
+  * which costs that one job.
   *
   * The sort key must be a unique total order for ranks to be
   * deterministic (add an id tie-break, as the reference's total sorts
@@ -45,15 +68,16 @@ object GlobalRank {
                             maxWhenChain: Int = MaxWhenChainPartitions): Checkpoints.Truncated = {
     import org.apache.spark.sql.functions._
     val n = df.sparkSession.sessionState.conf.numShufflePartitions
+    val packing = PackedKey.keys(df, sortCols).flatMap(PackedKey.measure(df, _, n))
     val tracked = Checkpoints.truncateTracked( // ids must be stable across the two uses
-      df.repartitionByRange(n, sortCols: _*)
-        .sortWithinPartitions(sortCols: _*)
+      packing.fold(df.repartitionByRange(n, sortCols: _*).sortWithinPartitions(sortCols: _*))(
+        _.sortedByRange(df, n))
         // monotonically_increasing_id encodes (partition << 33) + local row
         // index in iteration (= sorted) order — local position without
         // leaving codegen (an rdd.zipWithIndex would deserialize every row)
         .withColumn("_mid", monotonically_increasing_id()),
       eager = false)
-    val sorted = tracked.df
+    val sorted = packing.fold(tracked.df)(_.decoded(df, tracked.df))
     // per-partition row counts → cumulative start offsets (tiny driver data,
     // the TotalOrderPartitioner "partition file" analog)
     val counts = partitionTotals(sorted, lit(0L)).map { case (pid, rows, _) => pid -> rows }
@@ -126,7 +150,9 @@ object GlobalRank {
     * Same contracts as [[withGlobalRank]]: `sortCols` must be a unique
     * total order (the running sum uses a ROWS frame — ties would make it
     * nondeterministic), and the internal checkpoint pins the sorted frame
-    * until `release()`.
+    * until `release()`. It keeps the range exchange: its callers sort on
+    * md5 strings (TokenBlocks) and a double priority (Sampling), which do
+    * not pack.
     */
   def withGlobalCumSumTracked(df: DataFrame, sortCols: Seq[Column], weightCol: String,
                               cumCol: String = "cum_start",

@@ -16,7 +16,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - `time` warms up as Bench does (every table once into the noop
   *    sink), then makes three noop-sink runs per arg, each preceded by
   *    [[Bench.hygiene]], and prints every reading with the number of
-  *    Spark jobs it started, and their minimum.
+  *    Spark jobs it started, their tasks' executor CPU time and
+  *    shuffle-write megabytes, and the minimum time.
   *
   * The session is [[GraftSession.builder]]'s host-sized default.
   */
@@ -55,8 +56,9 @@ object Probe {
         targets.foreach { a =>
           val runs = (1 to Runs).map { i =>
             Bench.hygiene(spark)
-            val (t, n) = jobs.count(Bench.time(Bench.exec(resolve(spark, sfDir, a))))
-            println(f"${label(a)}%-24s run$i $t%.3f s $n%d jobs")
+            val (t, w) = jobs.measure(Bench.time(Bench.exec(resolve(spark, sfDir, a))))
+            println(f"${label(a)}%-24s run$i $t%.3f s ${w.jobs}%d jobs " +
+              f"${w.cpuNs / 1e9}%.3f s task cpu ${w.shuffleBytes / 1e6}%.3f MB shuffle")
             t
           }
           println(f"${label(a)}%-24s min  ${runs.min}%.3f s")

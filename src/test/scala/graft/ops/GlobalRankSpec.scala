@@ -2,11 +2,60 @@ package graft.ops
 
 import graft.SparkSpec
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, ShufflePartitionIdPassThrough}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerBusShim
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 
-class GlobalRankSpec extends SparkSpec {
+class GlobalRankSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private lazy val jobs = graft.tools.JobCounter.attach(spark)
+
+  /** The executed plans of the checkpoints `body` takes, in order. */
+  private def checkpointPlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = scala.collection.mutable.Buffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f.endsWith("heckpoint")) plans.synchronized(plans += qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; ListenerBusShim.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    plans.synchronized(plans.toSeq)
+  }
+
+  /** The shuffle of the one checkpoint `body` takes. */
+  private def rankShuffle(body: => Unit): ShuffleExchangeExec = {
+    val plans = checkpointPlans(body)
+    assert(plans.length == 1)
+    collect(plans.head) { case e: ShuffleExchangeExec => e } match {
+      case Seq(e) => e
+      case other => fail(s"expected one shuffle, got ${other.length}")
+    }
+  }
+
+  /** Ranks of `df` in `cols` order must equal a single-partition
+    * row_number, with every column's value intact, through the packed key
+    * (`packed`) or today's range exchange; the ranked schema must equal
+    * the one today's path gives, which a trailing constant double key
+    * forces without changing the order.
+    */
+  private def assertPackedRanks(df: DataFrame, cols: Seq[Column], packed: Boolean = true): Unit = {
+    var got: DataFrame = null
+    val shuffle = rankShuffle { got = GlobalRank.withGlobalRank(df, cols) }
+    assert(shuffle.outputPartitioning.isInstanceOf[ShufflePartitionIdPassThrough] == packed,
+      shuffle.outputPartitioning)
+    val today = GlobalRank.withGlobalRank(df, cols :+ lit(0.5))
+    assert(got.schema == today.schema)
+    val want = df.withColumn("rank", row_number().over(Window.orderBy(cols: _*)).cast("long"))
+    assert(got.collect().toSet == want.collect().toSet)
+    assert(today.collect().toSet == want.collect().toSet)
+  }
 
   /** `cols`-ordered ranks of `df` against a single-partition row_number. */
   private def assertRanksMatchRowNumber(df: DataFrame, cols: Seq[Column], key: String): Unit = {
@@ -45,6 +94,75 @@ class GlobalRankSpec extends SparkSpec {
       val df = (1 to 90).map(i => (i % 4, i.toLong)).toDF("lead", "id")
       assertRanksMatchRowNumber(df, Seq(col("lead"), col("id").desc), "id")
     } finally spark.conf.unset(Checkpoints.ReliableKey)
+  }
+
+  test("packed key: (date, long, int) ascending ranks as row_number, keys decode exactly") {
+    import spark.implicits._
+    val df = (1 to 300).map(i => (i, (i % 11 - 5).toLong, i % 37))
+      .toDF("r", "l", "d")
+      .select(col("r"), expr("date_add(date'2020-01-01', d - 20)").as("day"),
+        col("l"), (col("r") * 3).as("n"))
+    assertPackedRanks(df, Seq(col("day"), col("l"), col("n")))
+    // an input that shuffles would shuffle twice for the sampling pass
+    assertPackedRanks(df.repartition(3), Seq(col("day"), col("l"), col("n")), packed = false)
+  }
+
+  test("packed key: mixed desc and asc_nulls_last keys with nulls in every key") {
+    import spark.implicits._
+    val df = (1 to 240).map { i =>
+      (i, if (i % 9 == 0) None else Some(i % 6), if (i % 7 == 0) None else Some((i % 13).toLong),
+        if (i % 5 == 0) None else Some(i % 4 == 0), if (i == 17) None else Some(i))
+    }.toDF("r", "a", "b", "f", "id")
+      .withColumn("day", when(col("r") % 8 =!= 0, expr("date_add(date'1969-12-25', r % 10)")))
+    assertPackedRanks(df, Seq(col("a").desc, col("b").asc_nulls_last, col("f").desc_nulls_first,
+      col("day").asc_nulls_last, col("id").desc))
+  }
+
+  test("packed key: negative values, byte and short keys, timestamp keys") {
+    import spark.implicits._
+    val df = (1 to 200).map(i => (i, (i % 5 - 2).toByte, (i % 7 - 3).toShort, (i - 100) * 86400000L + i))
+      .toDF("r", "b", "s", "ms")
+      .select(col("r"), col("b"), col("s"), timestamp_millis(col("ms")).as("ts"),
+        timestamp_millis(-col("ms")).cast("timestamp_ntz").as("ntz"), (-col("r")).as("neg"))
+    assertPackedRanks(df, Seq(col("b").desc, col("s"), col("ts"), col("neg")))
+    assertPackedRanks(df, Seq(col("ntz").desc, col("r")))
+  }
+
+  test("packed key: an all-null key, a non-column key, and a single-row frame") {
+    import spark.implicits._
+    val df = (1 to 50).map(i => (i, Option.empty[Int], i % 3)).toDF("r", "none", "g")
+    assertPackedRanks(df, Seq(col("none"), col("g") * -2, col("r").desc))
+    assertPackedRanks(df.where(col("r") === 7), Seq(col("g"), col("r")))
+  }
+
+  test("full-range LONG keys cannot pack, fall back and still rank correctly") {
+    import spark.implicits._
+    val df = (1 to 60).map { i =>
+      val ext = if (i % 2 == 0) Long.MinValue else Long.MaxValue
+      (i, ext + (if (i % 2 == 0) i else -i), if (i % 3 == 0) Long.MaxValue else Long.MinValue)
+    }.toDF("r", "a", "b")
+    assertPackedRanks(df, Seq(col("b"), col("a")), packed = false)
+    // the sampling pass that found the fields too wide is one job on top
+    // of today's four
+    val (_, n) = jobs.count(GlobalRank.withGlobalRank(df, Seq(col("b"), col("a")))
+      .write.format("noop").mode("overwrite").save())
+    assert(n == 5)
+  }
+
+  test("q_sort_total shuffles only the packed key and radix-sorts it; q_keyfield_sort keeps the range exchange") {
+    var sorted: DataFrame = null
+    val shuffle = rankShuffle { sorted = graft.Queries.fullRegistry("q_sort_total").fn(spark, sfDir) }
+    assert(shuffle.outputPartitioning.isInstanceOf[ShufflePartitionIdPassThrough])
+    assert(shuffle.child.output.map(_.name) == Seq("_nk"))
+    val plans = checkpointPlans { graft.Queries.fullRegistry("q_sort_total").fn(spark, sfDir) }
+    val sorts = plans.flatMap(p => collect(p) { case s: SortExec => s })
+    assert(sorts.length == 1)
+    assert(sorts.head.sortOrder.map(o => (o.dataType, o.nullable)) == Seq((LongType, false)))
+    assert(sorted.schema == StructType(Seq(StructField("l_orderkey", LongType),
+      StructField("l_linenumber", IntegerType), StructField("ship", StringType),
+      StructField("rank", LongType, nullable = false))))
+    val keyfield = rankShuffle { graft.Queries.fullRegistry("q_keyfield_sort").fn(spark, sfDir) }
+    assert(keyfield.outputPartitioning.isInstanceOf[RangePartitioning])
   }
 
   test("withGlobalCumSum counts a null weight as 0, also over an all-null partition") {

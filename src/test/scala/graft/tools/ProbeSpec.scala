@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.SparkSpec
 import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.functions.col
 
 class ProbeSpec extends SparkSpec {
 
@@ -18,5 +19,14 @@ class ProbeSpec extends SparkSpec {
       "SELECT graft_token_count(text) AS n FROM documents")
     assert(sql.queryExecution.analyzed.resolved)
     assert(sql.columns.toSeq == Seq("n"))
+  }
+
+  test("JobCounter.measure sums the jobs, task CPU and shuffle-write bytes of its body") {
+    val counter = JobCounter.attach(spark)
+    val (_, w) = counter.measure(spark.range(0, 20000, 1, 4).groupBy(col("id") % 7).count()
+      .write.format("noop").mode("overwrite").save())
+    assert(w.jobs >= 1 && w.cpuNs > 0 && w.shuffleBytes > 0)
+    val (_, idle) = counter.measure(())
+    assert(idle == JobCounter.Work(0, 0, 0))
   }
 }
