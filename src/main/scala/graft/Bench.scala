@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 /** Per-round benchmark main. Mirrors the reference's gridmix/MRBench
@@ -25,6 +26,19 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** The bench's one NonFatal catch: a failure inside `body` (a table
+    * that fails to load, a plan that fails to analyse, a run that throws)
+    * costs its own bench line, never the whole artifact — an events schema
+    * drift once zeroed every number by throwing in warm-up. Fatal VM errors
+    * (OOM, StackOverflow) are not caught: numbers measured after an OOM
+    * are untrustworthy, so the run must die.
+    */
+  private[graft] def guarded[A](what: String)(body: => A): Option[A] =
+    try Some(body) catch { case NonFatal(e) =>
+      System.err.println(s"[bench] $what failed: ${e.getMessage}")
+      None
+    }
+
   /** Normalized physical-plan string: expression/plan ids stripped and
     * `substring`/`substr` unified (the SQL parser and the Column API render
     * the same expression under different names). Sides that compare equal
@@ -36,9 +50,9 @@ object Bench {
     .replaceAll("\\bid=#?\\d+\\b", "id=x").replaceAll("substring\\(", "substr(")
 
   private val planDump = new StringBuilder
-  private val planMatches = scala.collection.mutable.LinkedHashMap[String, Boolean]()
+  private[graft] val planMatches = mutable.LinkedHashMap[String, Boolean]()
   // the d-series' untimed attribution counters (`scale10x_diag`)
-  private[graft] val scaleDiag = scala.collection.mutable.LinkedHashMap[String, Long]()
+  private[graft] val scaleDiag = mutable.LinkedHashMap[String, Long]()
 
   // ---- band guard. Single-run outliers used to ship unattributable
   // (q_substring_trim_exact 79.0 s vs its 8.5–14.4 s cross-round band;
@@ -46,11 +60,10 @@ object Bench {
   // drift, but no consumer of the artifact could re-do that. The guard
   // makes the artifact self-attributing: any suite/d-series reading
   // that exceeds [[BandFactor]]x its committed prior-round band gets ONE
-  // more
-  // hygiene-separated run, and BOTH readings land in the `out_of_band`
-  // artifact field — a drift window shows a confirming in-band second
-  // run; a real regression shows two agreeing out-of-band runs.
-  // Near-zero cost in a clean run (nothing re-runs).
+  // more hygiene-separated run, and BOTH readings land in the
+  // `out_of_band` artifact field — a drift window shows a confirming
+  // in-band second run; a real regression shows two agreeing out-of-band
+  // runs. Near-zero cost in a clean run (nothing re-runs).
   //
   // Bands: src/main/resources/graft/bench_bands.json — per-key MEDIANS
   // over the last five committed BENCH_FULL.json artifacts (median is
@@ -58,10 +71,10 @@ object Bench {
   // by dev/make_bands.py; regenerate after each certified round. Keys
   // absent from the file (new queries) simply skip the guard one round.
   private val BandFactor = 2.0
-  private[graft] lazy val bands: Map[String, Double] = try {
+  private[graft] lazy val bands: Map[String, Double] = guarded("bands load") {
     // override path (tests/driver experiments) > classpath > the repo
-    // file (class-dir runs where resources were not copied — dev/run.sh
-    // after a bare compile)
+    // file resolved against the working directory (class-dir runs where
+    // resources were not copied — dev/run.sh after a bare compile)
     val txt = sys.props.get("graft.bench.bands")
       .map(p => new String(
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8"))
@@ -71,8 +84,6 @@ object Bench {
           finally in.close()
         })
       .orElse {
-        // class-dir runs where resources were not copied (dev/run.sh after
-        // a bare compile): resolve against the working directory
         Some(new java.io.File(sys.props.getOrElse("user.dir", "."),
               "src/main/resources/graft/bench_bands.json"))
           .filter(_.isFile)
@@ -82,39 +93,28 @@ object Bench {
       .getOrElse("")
     """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(txt)
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
-  } catch { case NonFatal(e) =>
-    System.err.println(s"[bench] bands load failed: ${e.getMessage}")
-    Map.empty
-  }
+  }.getOrElse(Map.empty)
+
   /** One out-of-band record: every reading taken (original run(s) plus
-    * the confirming re-run when funded), each probe lane's seconds at
-    * guard-fire time, and the instantaneous per-lane index derived from
-    * it (-1 when no probe / no probe baseline exists).
+    * the confirming re-run when funded) and each probe lane's
+    * `(seconds, index)` at guard-fire time, in [[lanes]] order (-1 where
+    * a probe or its baseline is unavailable).
     */
-  private[graft] case class Oob(runs: Seq[Double], probeS: Double,
-                                machineIndex: Double,
-                                hashProbeS: Double = -1.0,
-                                hashIndex: Double = -1.0,
-                                writeProbeS: Double = -1.0,
-                                writeIndex: Double = -1.0)
-  private[graft] val outOfBand =
-    scala.collection.mutable.LinkedHashMap[String, Oob]()
+  private[graft] case class Oob(runs: Seq[Double], probes: Seq[(Double, Double)])
+  private[graft] val outOfBand = mutable.LinkedHashMap[String, Oob]()
 
   // ---- warm stamps. A reading at 1.71x its band (q_heavy_hitters) sits
   // under the 2x trip, so no guard fire, no probe stamp, and the
   // artifact would be silent about why. Every banded reading that lands
   // in [WarmFactor, BandFactor) x band records the reading, the band
-  // and all three probe-lane indexes taken AT that moment — pure
-  // evidence, no confirming re-run. Probes cost ~5 s per stamp, so a
-  // pathological all-keys-warm window caps at [[MaxWarmProbes]] probed
-  // stamps; later warm keys still record reading/band with -1 indexes.
+  // and every probe lane's index taken AT that moment — pure evidence,
+  // no confirming re-run. Probes cost ~5 s per stamp, so a pathological
+  // all-keys-warm window caps at [[MaxWarmProbes]] probed stamps; later
+  // warm keys still record reading/band with -1 indexes.
   private val WarmFactor = 1.5
   private val MaxWarmProbes = 12
-  private[graft] case class Warm(reading: Double, band: Double,
-                                 sortIndex: Double, hashIndex: Double,
-                                 writeIndex: Double)
-  private[graft] val warmStamps =
-    scala.collection.mutable.LinkedHashMap[String, Warm]()
+  private[graft] case class Warm(reading: Double, band: Double, indexes: Seq[Double])
+  private[graft] val warmStamps = mutable.LinkedHashMap[String, Warm]()
 
   // ---- run-speed normalizer. A drift window spanning the whole run
   // defeats confirming re-runs taken inside it (q_substring_trim_exact
@@ -126,18 +126,18 @@ object Bench {
   //    controls run. Controls measure the machine, not library code, so
   //    index ≈ 1.0 on a quiet run and reading/band ≈ index on a
   //    uniformly slow one.
-  //  * machine probe — a tiny pinned control (the b6 supplier sort SQL)
-  //    re-executed at every band-guard FIRE, so each out_of_band entry
-  //    carries the machine's speed at its own measurement instant,
-  //    normalized against the probe's committed band (first round: this
-  //    run's own start-of-run calibration).
+  //  * the probe [[lanes]] — tiny pinned plans re-executed at every
+  //    band-guard FIRE, so each out_of_band entry carries the machine's
+  //    speed at its own measurement instant, normalized against the
+  //    lane's committed band (first round: this run's own start-of-run
+  //    calibration).
   private var ctlSumMeasured = 0.0
   private var ctlSumBand = 0.0
   // control keys measured this run whose _ctl band is MISSING — they
   // silently thin machine_index's denominator after a control rename,
   // so they go into the `unbanded` artifact field like any other
   // banded-miss (a no-op here would be the one quiet path left)
-  private val ctlUnbanded = scala.collection.mutable.LinkedHashSet[String]()
+  private val ctlUnbanded = mutable.LinkedHashSet[String]()
   private[graft] def registerControl(bandKey: String, secs: Double): Unit =
     bands.get(bandKey) match {
       case Some(b) => ctlSumMeasured += secs; ctlSumBand += b
@@ -145,89 +145,60 @@ object Bench {
     }
   private def machineIndex: Double =
     if (ctlSumBand > 0) ctlSumMeasured / ctlSumBand else -1.0
-  // assigned in main once the control temp views exist; min-of-2 after a
-  // burn run, NO hygiene — the probe must sample the environment the
-  // guarded reading just ran in, not a freshly-scrubbed one
-  private[graft] var machineProbeFn: () => Option[Double] = () => None
-  private[graft] var probeCalibration: Option[Double] = None
-  private def probeBaseline: Option[Double] =
-    bands.get("machine_probe").orElse(probeCalibration)
-  // second probe FLAVOR: a drift window can slow the md5/minhash codegen
-  // lane ~2x while sort-shaped work stays at band (IncrNearProbe: sig
-  // passes 11.7→1.3 s across reps in one JVM while the sort probe read
-  // 0.5x) — a sort-only probe then reads
-  // "machine fast" on a hash-lane fire. The hash probe is md5-bound
-  // pinned SQL; its index distinguishes hash-lane slowness (hash_index
-  // high, machine_index ~1) from whole-machine slowness (both high).
-  private[graft] var hashProbeFn: () => Option[Double] = () => None
-  private[graft] var hashProbeCalibration: Option[Double] = None
-  private def hashProbeBaseline: Option[Double] =
-    bands.get("machine_hash_probe").orElse(hashProbeCalibration)
-  // third probe FLAVOR: d8_pagerank_10x once fired at 2.7–4.4x band while the
-  // sort probe read 0.68 (machine FAST) and the hash probe 1.14 — the
-  // decision rule's real-regression signature — yet a fresh-JVM re-measure
-  // read dead on band. The blind spot: d8's per-iteration cost is
-  // checkpoint-block + sink WRITES, a lane neither CPU-sort nor md5-hash work
-  // touches. The write probe localCheckpoints and parquet-writes a fixed
-  // small table (the PageRank per-iteration shape), so a write/IO window
-  // stamps its own index into the evidence instead of masquerading as a
-  // regression.
-  private[graft] var writeProbeFn: () => Option[Double] = () => None
-  private[graft] var writeProbeCalibration: Option[Double] = None
-  private def writeProbeBaseline: Option[Double] =
-    bands.get("machine_write_probe").orElse(writeProbeCalibration)
 
-  /** All three probe lanes sampled NOW: seconds + index per lane
-    * (-1 where a probe or its baseline is unavailable). Decision rule
-    * (SCALING.md): reading/band ≈ any ONE index → that lane's machine
-    * window; all indexes ≈ 1 with agreeing runs → real regression.
+  /** One machine-probe lane. `probe` samples the lane's pinned plan NOW
+    * (None when unwired or failed; see [[calibrate]]); its index divides
+    * that by the committed `bandKey` band, else by `calibration`, this
+    * run's start-of-run reading. Decision rule (SCALING.md):
+    * reading/band ≈ any ONE lane index → that lane's machine window; all
+    * indexes ≈ 1 with agreeing runs → real regression.
     */
-  private final case class ProbeStamp(sortS: Double, sortIdx: Double,
-                                      hashS: Double, hashIdx: Double,
-                                      writeS: Double, writeIdx: Double)
-  private def stampProbes(): ProbeStamp = {
-    def one(fn: () => Option[Double],
-            base: => Option[Double]): (Double, Double) = {
-      val p = fn()
+  private[graft] final case class Lane(name: String, bandKey: String,
+                                       probe: () => Option[Double] = () => None,
+                                       calibration: Option[Double] = None) {
+    /** `(seconds, index)` sampled now, -1 where unavailable. */
+    def stamp(): (Double, Double) = {
+      val p = probe()
       (p.getOrElse(-1.0),
-        (for { v <- p; b <- base } yield v / math.max(b, 1e-9))
-          .getOrElse(-1.0))
+        (for { v <- p; b <- bands.get(bandKey).orElse(calibration) }
+          yield v / math.max(b, 1e-9)).getOrElse(-1.0))
     }
-    val (s, si) = one(machineProbeFn, probeBaseline)
-    val (h, hi) = one(hashProbeFn, hashProbeBaseline)
-    val (w, wi) = one(writeProbeFn, writeProbeBaseline)
-    ProbeStamp(s, si, h, hi, w, wi)
   }
+  // Three lanes, because a drift window can slow one kind of work alone:
+  //  * sort — CPU sort-shaped work (the b6 supplier sort SQL);
+  //  * hash — md5-bound pinned SQL: a window once slowed the md5/minhash
+  //    codegen lane ~2x (IncrNearProbe: sig passes 11.7→1.3 s across reps
+  //    in one JVM) while the sort probe read 0.5x, "machine fast";
+  //  * write — localCheckpoint + parquet write of a fixed table, the
+  //    PageRank per-iteration shape: d8_pagerank_10x once fired at
+  //    2.7–4.4x band while sort read 0.68 and hash 1.14 — the
+  //    real-regression signature — yet a fresh-JVM re-measure read dead
+  //    on band; its cost is checkpoint-block + sink WRITES, which neither
+  //    other lane touches.
+  private[graft] var lanes: Seq[Lane] = Seq(Lane("sort", "machine_probe"),
+    Lane("hash", "machine_hash_probe"), Lane("write", "machine_write_probe"))
 
   /** Apply the band guard to a completed measurement: returns the final
     * reading (min over all runs incl. the confirming one) and records
-    * out-of-band evidence — stamped with all three probe lanes taken at
-    * fire time. `rerun` must be hygiene-separated and return None on failure or when the remaining
-    * budget cannot fund it (the original reading then stands, still
-    * flagged out_of_band). Readings in the 1.5–2x warm zone stamp probe
-    * evidence without a re-run.
+    * out-of-band evidence — stamped with every probe lane taken at fire
+    * time. `rerun` must be hygiene-separated and return None on failure
+    * or when the remaining budget cannot fund it (the original reading
+    * then stands, still flagged out_of_band). Readings in the 1.5–2x warm
+    * zone stamp probe evidence without a re-run.
     */
   private[graft] def bandGuarded(key: String, runs: Seq[Double],
                                  rerun: () => Option[Double]): Double = {
     val best = runs.min
     bands.get(key) match {
       case Some(b) if best > b * BandFactor =>
-        val p = stampProbes()
-        (if (remainingS >= best * 1.5 + 30) rerun() else None) match {
-          case Some(again) =>
-            outOfBand(key) = Oob(runs :+ again, p.sortS, p.sortIdx,
-              p.hashS, p.hashIdx, p.writeS, p.writeIdx)
-            math.min(best, again)
-          case None =>
-            outOfBand(key) = Oob(runs, p.sortS, p.sortIdx,
-              p.hashS, p.hashIdx, p.writeS, p.writeIdx)
-            best
-        }
+        val p = lanes.map(_.stamp())
+        val again = if (remainingS >= best * 1.5 + 30) rerun() else None
+        outOfBand(key) = Oob(runs ++ again, p)
+        again.fold(best)(math.min(best, _))
       case Some(b) if best > b * WarmFactor =>
-        if (warmStamps.size < MaxWarmProbes) {
-          val p = stampProbes()
-          warmStamps(key) = Warm(best, b, p.sortIdx, p.hashIdx, p.writeIdx)
-        } else warmStamps(key) = Warm(best, b, -1.0, -1.0, -1.0)
+        warmStamps(key) = Warm(best, b,
+          if (warmStamps.size < MaxWarmProbes) lanes.map(_.stamp()._2)
+          else lanes.map(_ => -1.0))
         best
       case _ => best
     }
@@ -246,7 +217,7 @@ object Bench {
   private lazy val budgetS: Double =
     sys.env.getOrElse("BENCH_BUDGET_S", "2700").toDouble
   private def remainingS: Double = budgetS - elapsedS
-  private[graft] val skipped = scala.collection.mutable.LinkedHashSet[String]()
+  private[graft] val skipped = mutable.LinkedHashSet[String]()
 
   // ---- suite-tail rotation. 282 timed suite keys × min-of-2 + hygiene left
   // zero headroom against the 2700 s budget on a slow machine — and
@@ -288,7 +259,7 @@ object Bench {
         bands.get(name).exists(_ < RotateBelowS) &&
         math.abs(name.hashCode % 2) != p
     }
-  private val rotated = scala.collection.mutable.LinkedHashSet[String]()
+  private[graft] val rotated = mutable.LinkedHashSet[String]()
 
   /** True when `need` more seconds still fit the budget; else records
     * the skip under `what` and returns false.
@@ -297,17 +268,18 @@ object Bench {
     if (remainingS >= need) true else { skipped += what; false }
 
   /** Record + dump whether ours/control plan identically (per scale tag). */
-  private def checkPlanMatch(tag: String, ours: DataFrame, ctl: DataFrame): Unit =
-    try {
+  private[graft] def checkPlanMatch(tag: String, ours: DataFrame, ctl: DataFrame): Unit =
+    guarded(s"plan-match $tag") {
       val (op, cp) = (normPlan(ours), normPlan(ctl))
       planMatches(tag) = op == cp
       planDump.append(s"== $tag OURS ==\n$op\n== $tag CONTROL ==\n$cp\n")
         .append(s"== MATCH: ${op == cp} ==\n\n")
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] plan-match $tag failed: ${e.getMessage}")
     }
 
-  /** ABBA-interleaved ours/control measurement. Protocol, in order:
+  /** ABBA-interleaved ours/control measurement; returns the
+    * `(ours, control)` readings and feeds the control's to machine_index
+    * under `ctlBandKey` (the control side is plan-pinned hand-SQL, so
+    * measured/band over controls indexes the MACHINE). Protocol, in order:
     *
     *  1. `hygiene` — clean slate (cache, stray RDDs, scratch dirs, GC).
     *  2. A BURN pair, one uncounted run per side: the first slot after
@@ -317,23 +289,23 @@ object Bench {
     *  3. One ABBA pass (ctl,ours,ours,ctl), min-of-2 per side; sub-2s
     *     pairs get a second pass (jitter-dominated at min-of-2).
     *  4. Adaptive retries: a ratio outside [1/1.5, 1.5] on plan-identical
-    *     sides is JVM-state drift (r4: b3 read 3.75x mid-suite, 0.97x in a
-    *     fresh JVM), so run up to 2 more ABBA passes. Mins only decrease —
-    *     retries cannot fabricate a fast side, they only give both sides
+    *     sides is JVM-state drift (b3 once read 3.75x mid-suite, 0.97x in
+    *     a fresh JVM), so run up to 2 more ABBA passes. Mins only decrease
+    *     — retries cannot fabricate a fast side, they only give both sides
     *     equal chances at a clean slot; a genuine plan regression survives
     *     every retry and is reported as-is.
+    *
+    * A failed pair is None — a missing entry, never an aborted run: the
+    * suite timings already taken must survive.
     */
-  private def measurePair(spark: SparkSession, name: String,
-                          ours: DataFrame, ctl: DataFrame,
-                          times: scala.collection.mutable.Map[String, Double],
-                          ctlTimes: scala.collection.mutable.Map[String, Double],
-                          ctlBandKey: Option[String] = None): Unit =
-    try {
-      if (!budgetOk(name, 120)) return
+  private def measurePair(spark: SparkSession, name: String, ours: DataFrame,
+                          ctl: DataFrame, ctlBandKey: String): Option[(Double, Double)] =
+    if (!budgetOk(name, 120)) None
+    else guarded(s"pair $name") {
       hygiene(spark)
       exec(ctl); exec(ours) // burn pair — see scaladoc
-      val cs = scala.collection.mutable.ArrayBuffer[Double]()
-      val os = scala.collection.mutable.ArrayBuffer[Double]()
+      val cs = mutable.ArrayBuffer[Double]()
+      val os = mutable.ArrayBuffer[Double]()
       def abba(): Unit = {
         cs += time(exec(ctl)); os += time(exec(ours))
         os += time(exec(ours)); cs += time(exec(ctl))
@@ -344,17 +316,8 @@ object Bench {
       while (extra < 2 && {
         val r = os.min / math.max(cs.min, 1e-9); r > 1.5 || r < 0.667
       }) { abba(); extra += 1 }
-      times(name) = os.min
-      ctlTimes(name) = cs.min
-      // feed the run-speed normalizer: the control side is plan-pinned
-      // hand-SQL, so measured/band over controls indexes the MACHINE
-      ctlBandKey.foreach(registerControl(_, cs.min))
-    } catch { case NonFatal(e) =>
-      // a pair failure degrades the report (missing entry), never aborts
-      // the run — the 80+ suite timings already taken must survive.
-      // Fatal VM errors (OOM, StackOverflow) are NOT swallowed: numbers
-      // measured after an OOM are untrustworthy, so the run must die.
-      System.err.println(s"[bench] pair $name failed: ${e.getMessage}")
+      registerControl(ctlBandKey, cs.min)
+      (os.min, cs.min)
     }
 
   /** Per-query state hygiene. Round 3's suite timings degraded 3–30x on
@@ -379,9 +342,13 @@ object Bench {
     // With the RocksDB provider each unloaded provider is closed, which
     // closes its native RocksDB instance and deletes its local working
     // copy. No active query runs during hygiene, so unloading is safe;
-    // the method is private[sql] at the Scala level only, hence
-    // reflection.
-    unloadStateStores()
+    // `StateStore.unloadAll()` is private[sql] at the Scala level only,
+    // hence reflection.
+    guarded("state-store unload") {
+      val cls = Class.forName(
+        "org.apache.spark.sql.execution.streaming.state.StateStore$")
+      cls.getMethod("unloadAll").invoke(cls.getField("MODULE$").get(null))
+    }
     // this JVM's ExtraQueries round-trip scratch ONLY — deleting the
     // shared root would yank a concurrent process's staging mid-write
     rmrf(new java.io.File(ExtraQueries.scratchRoot))
@@ -398,96 +365,169 @@ object Bench {
     f.delete()
   }
 
-  /** `StateStore.unloadAll()` via reflection — see the hygiene note.
-    * It removes every loaded provider and calls its `close()`.
-    */
-  private def unloadStateStores(): Unit = try {
-    val cls = Class.forName(
-      "org.apache.spark.sql.execution.streaming.state.StateStore$")
-    cls.getMethod("unloadAll").invoke(cls.getField("MODULE$").get(null))
-  } catch { case NonFatal(e) =>
-    System.err.println(s"[bench] state-store unload failed: ${e.getMessage}")
-  }
+  // The 10x gridmix amplifies its fact tables into 10 copies, the integer
+  // key offset per copy so joins/sorts see 10x distinct keys, not 10x
+  // duplicates of each key; dimensions stay 1x (10x facts per part).
+  private val GridmixKeys =
+    Map("lineitem" -> "l_orderkey", "events" -> "event_id", "documents" -> "doc_id")
 
-  /** Guard for plan CONSTRUCTION (load/analysis): one broken table or
-    * query must cost its own bench line, never the whole artifact —
-    * r8's events schema drift zeroed every number by throwing in
-    * warm-up, which is exactly the failure mode this closes.
+  /** The gridmix-shaped headline pairs B1–B5 (BASELINE.md table) at scale
+    * `x` (1 or 10), as `(name, ours, control)`. Each control is
+    * hand-written "native Spark SQL" over temp views — `<table>` at 1x,
+    * `<table>10x` at 10x — with no library code; BASELINE.md's pass
+    * criterion is ≤2x it. The 10x form is the same plan over amplified
+    * facts ([[GridmixKeys]]), to catch super-linearity an order of
+    * magnitude early: single tables are amplified, not re-generated —
+    * this times plan scaling, it is not a correctness input. Each pair is
+    * built under [[guarded]], so a table that fails to load or analyse
+    * costs its own pair at that scale.
     */
-  private def guarded[A](what: String)(mk: => A): Option[A] =
-    try Some(mk) catch { case NonFatal(e) =>
-      System.err.println(s"[bench] $what failed to build: ${e.getMessage}")
-      None
+  private[graft] def gridmix(s: SparkSession, dir: String,
+                             x: Int): Seq[(String, DataFrame, DataFrame)] = {
+    def table(t: String): DataFrame = {
+      val df = Tables.load(s, dir, t)
+      if (x == 1) df else GridmixKeys.get(t).fold(df)(copies(df, x, _))
     }
-
-  /** Gridmix-shaped headline benches (BASELINE.md table). */
-  def headline(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
-    lazy val li = Tables.load(s, dir, "lineitem")
-    lazy val ev = Tables.load(s, dir, "events")
-    lazy val docs = Tables.load(s, dir, "documents")
-    Seq[(String, () => DataFrame)](
-      // B1 monsterQuery: 3-stage keep-ratio pipeline
-      "b1_monster" -> (() => Queries.queries("q_monster")(s, dir)),
+    def view(t: String): String = {
+      val v = if (x == 1) t else s"$t${x}x"
+      table(t).createOrReplaceTempView(v)
+      v
+    }
+    Seq[(String, () => (DataFrame, DataFrame))](
+      // B1 monsterQuery: 3-stage keep-ratio pipeline. At 1x it IS the
+      // q_monster registry entry, which the twin check re-times at the
+      // end of the run; at 10x the same body over the amplified facts.
+      "b1_monster" -> (() => (
+        if (x == 1) Queries.queries("q_monster")(s, dir)
+        else Queries.monster(table("lineitem"), table("part")),
+        s.sql(s"""
+          WITH s1 AS (
+            SELECT l_partkey, sum(CAST(l_quantity AS BIGINT)) AS qty,
+                   sum(CAST(round(l_extendedprice*100, 0) AS BIGINT)) AS rev_cents
+            FROM ${view("lineitem")}
+            WHERE substr(md5(CAST(l_orderkey*8 + l_linenumber AS STRING)), 1, 1) IN ('0','1')
+            GROUP BY 1),
+          s2 AS (
+            SELECT p_brand, sum(rev_cents) AS revenue_cents, count(1) AS nparts
+            FROM s1 JOIN ${view("part")} ON l_partkey = p_partkey GROUP BY 1)
+          SELECT * FROM s2 ORDER BY revenue_cents DESC, p_brand LIMIT 10"""))),
       // B2 full sort by composite key (the reference's large passthrough sort)
-      "b2_full_sort" -> (() => li.orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))),
-      // B3 reference select: ~0.2% filter, single output partition
-      "b3_ref_select" -> (() => li
-        .where(substring(md5(concat_ws("|", col("l_orderkey"), col("l_linenumber"))), 1, 2)
-          .isin("00")) // 1/256 ≈ 0.4%
-        .coalesce(1)),
-      // B4 text sort: sort of text-rendered events
-      "b4_text_sort" -> (() => ev
-        .select(concat_ws("\t", col("event_id"), col("event_type"),
-          col("user_id"), col("value")).as("line"))
-        .orderBy("line")),
-      // B5 combiner wordcount (map-side partial agg = the combiner)
-      "b5_wordcount" -> (() => docs
-        .select(explode(split(col("text"), "\\s+")).as("w"))
-        .where(length(col("w")) > 0)
-        .groupBy("w").agg(count(lit(1)).as("cnt"))),
-    ).flatMap { case (n, mk) => guarded(n)(mk()).map(n -> _) }
+      "b2_full_sort" -> (() => (
+        table("lineitem").orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber")),
+        s.sql(s"SELECT * FROM ${view("lineitem")} ORDER BY l_shipdate, l_orderkey, l_linenumber"))),
+      // B3 reference select: 1/256 ≈ 0.4% filter, single output partition
+      "b3_ref_select" -> (() => (
+        table("lineitem")
+          .where(substring(md5(concat_ws("|", col("l_orderkey"), col("l_linenumber"))), 1, 2)
+            .isin("00"))
+          .coalesce(1),
+        s.sql(s"""SELECT * FROM ${view("lineitem")}
+          WHERE substr(md5(concat_ws('|', l_orderkey, l_linenumber)), 1, 2) = '00'""")
+          .coalesce(1))),
+      // B4 text sort: sort of text-rendered events (raw"": the SQL parser,
+      // not Scala, unescapes the literals)
+      "b4_text_sort" -> (() => (
+        table("events").select(concat_ws("\t", col("event_id"), col("event_type"),
+          col("user_id"), col("value")).as("line")).orderBy("line"),
+        s.sql(raw"""SELECT concat_ws('\t', event_id, event_type, user_id, value) AS line
+          FROM ${view("events")} ORDER BY line"""))),
+      // B5 combiner wordcount (map-side partial agg = the combiner). At 10x
+      // the words come from duplicated text: 10x rows per key at FIXED key
+      // cardinality — intentional, it scales the combiner/partial-agg
+      // shape the reference's combiner benches stressed
+      "b5_wordcount" -> (() => (
+        table("documents").select(explode(split(col("text"), "\\s+")).as("w"))
+          .where(length(col("w")) > 0)
+          .groupBy("w").agg(count(lit(1)).as("cnt")),
+        s.sql(raw"""SELECT w, count(1) AS cnt FROM (
+          SELECT explode(split(text, '\\s+')) AS w FROM ${view("documents")})
+          WHERE length(w) > 0 GROUP BY 1"""))),
+    ).flatMap { case (n, mk) =>
+      guarded(s"${n}_${x}x")(mk()).map { case (ours, ctl) => (n, ours, ctl) }
+    }
   }
 
-  /** Hand-written "native Spark SQL" controls for the headline benches —
-    * BASELINE.md's pass criterion is ≤2x these. Registered temp views,
-    * plain SQL text, no library code.
+  /** B6, the MRBench analog: a small sort, ours and its native-SQL
+    * control (BASELINE.md's criterion is ≤2x a native control for EVERY
+    * bench).
     */
-  def controls(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
-    Tables.names.foreach { n =>
-      guarded(s"view $n")(
-        Tables.load(s, dir, n).createOrReplaceTempView(n))
+  private[graft] def mrbench(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val sup = Tables.load(s, dir, "supplier")
+    sup.createOrReplaceTempView("supplier")
+    (sup.orderBy("s_name"), s.sql("SELECT * FROM supplier ORDER BY s_name"))
+  }
+
+  /** Times gridmix `pairs` via [[measurePair]] with a plan-identity
+    * check per pair (tag `<name>_<scale>`): a reported ratio on matching
+    * plans measures environment spread, and the retries bound it. The
+    * control feeds machine_index under `<name><ctlBand>`.
+    */
+  private def runPairs(spark: SparkSession, pairs: Seq[(String, DataFrame, DataFrame)],
+                       scale: String, ctlBand: String, times: mutable.Map[String, Double],
+                       ctlTimes: mutable.Map[String, Double]): Unit =
+    pairs.foreach { case (n, ours, ctl) =>
+      checkPlanMatch(s"${n}_$scale", ours, ctl)
+      measurePair(spark, n, ours, ctl, s"$n$ctlBand").foreach { case (o, c) =>
+        times(n) = o
+        ctlTimes(n) = c
+      }
     }
-    Seq[(String, () => DataFrame)](
-      "b1_monster" -> (() => s.sql("""
-        WITH s1 AS (
-          SELECT l_partkey, sum(CAST(l_quantity AS BIGINT)) AS qty,
-                 sum(CAST(round(l_extendedprice*100, 0) AS BIGINT)) AS rev_cents
-          FROM lineitem
-          WHERE substr(md5(CAST(l_orderkey*8 + l_linenumber AS STRING)), 1, 1) IN ('0','1')
-          GROUP BY 1),
-        s2 AS (
-          SELECT p_brand, sum(rev_cents) AS revenue_cents, count(1) AS nparts
-          FROM s1 JOIN part ON l_partkey = p_partkey GROUP BY 1)
-        SELECT * FROM s2 ORDER BY revenue_cents DESC, p_brand LIMIT 10""")),
-      "b2_full_sort" -> (() => s.sql(
-        "SELECT * FROM lineitem ORDER BY l_shipdate, l_orderkey, l_linenumber")),
-      "b3_ref_select" -> (() => s.sql("""
-        SELECT * FROM lineitem
-        WHERE substr(md5(concat_ws('|', l_orderkey, l_linenumber)), 1, 2) = '00'""")
-        .coalesce(1)),
-      "b4_text_sort" -> (() => s.sql("""
-        SELECT concat_ws('\t', event_id, event_type, user_id, value) AS line
-        FROM events ORDER BY line""")),
-      "b5_wordcount" -> (() => s.sql("""
-        SELECT w, count(1) AS cnt FROM (
-          SELECT explode(split(text, '\\s+')) AS w FROM documents)
-        WHERE length(w) > 0 GROUP BY 1""")),
-    ).flatMap { case (n, mk) => guarded(s"${n}_control")(mk()).map(n -> _) }
+
+  /** What one run has measured so far; [[emit]] writes it out. */
+  private final class Run(val sfDir: String) {
+    val queries = mutable.LinkedHashMap[String, Double]() // suite + 1x headline
+    val controls = mutable.LinkedHashMap[String, Double]()
+    val streamEarly = mutable.LinkedHashMap[String, Double]()
+    val scale10x = mutable.LinkedHashMap[String, Double]()
+    val scale10xCtl = mutable.LinkedHashMap[String, Double]()
+    val failed = mutable.ArrayBuffer[String]()
+    var twin: Option[Double] = None // the end-of-run q_monster pair reading
+    var suiteRan = false
+    var writeFailed = false
+    /** Artifact-completeness gate: every registry query must appear in
+      * this run's own results, failed, skipped or rotated list — a suite
+      * once silently shrank. Empty before the suite loop starts.
+      */
+    def missingFromSuite: Seq[String] =
+      if (!suiteRan) Nil
+      else (Queries.queries.keySet -- queries.keySet -- failed -- skipped -- rotated)
+        .toSeq.sorted
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val run = new Run(sfDir)
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    warmUp(spark, run.sfDir)
+    calibrate(spark, run.sfDir)
+    val pairs = gridmix(spark, run.sfDir, 1)
+    headline(spark, run, pairs)
+    streamEarly(spark, run)
+    // EARLY artifact: headline ratios + plan bits are certified; a
+    // timeout anywhere past this point still leaves this valid artifact
+    // (marked suite_incomplete, twin unknown → contaminated)
+    emit(run, "headline", printFull = false, printSummary = true)
+    // the scale step BEFORE the suite loop: a run that blew the budget
+    // inside the 282-key suite loop once skipped 29 trend keys. The trend
+    // points are the uncompressible scale certification; the suite tail
+    // is individually cheap, band-guarded and rotatable — so it, not the
+    // d-series, absorbs a slow machine window.
+    scale(spark, run)
+    emit(run, "scale", printFull = false, printSummary = false)
+    run.suiteRan = true
+    runSuite(spark, Queries.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
+      n -> (() => time(exec(fn(spark, run.sfDir))))
+    }, run.queries, run.failed)
+    twin(spark, run, pairs)
+    // final artifact: the full line + summary, printed as the LAST
+    // stdout lines so any tail capture parses the summary
+    emit(run, "complete", printFull = true, printSummary = true)
+    rmrf(new java.io.File(writeProbePath))
+    spark.stop()
+    if (run.failed.nonEmpty || run.missingFromSuite.nonEmpty || run.writeFailed) sys.exit(1)
+  }
+
+  private def session(cpus: String): SparkSession = {
     val spark = GraftSession.builder("graft-bench", cpus.toInt)
       .config("spark.sql.shuffle.partitions", cpus)
       // plan strings truncate field lists at 100 chars by default; the
@@ -500,302 +540,172 @@ object Bench {
     // output — local-checkpoint WARN spam printed after a summary line
     // would push it out of the captured window on a timeout
     spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
 
-    // warm-up: JIT + codegen + broadcast machinery + FS metadata + page
-    // cache for the big tables, not counted (otherwise whichever variant
-    // runs first pays session init and the cold file read)
-    guarded("warmup join")(exec(Tables.load(spark, sfDir, "supplier")
-      .join(org.apache.spark.sql.functions.broadcast(
-        Tables.load(spark, sfDir, "nation")),
-        org.apache.spark.sql.functions.col("s_nationkey") ===
-          org.apache.spark.sql.functions.col("n_nationkey"))
+  /** JIT + codegen + broadcast machinery + FS metadata + page cache for
+    * the big tables, not counted (otherwise whichever variant runs first
+    * pays session init and the cold file read).
+    */
+  private def warmUp(spark: SparkSession, dir: String): Unit = {
+    guarded("warmup join")(exec(Tables.load(spark, dir, "supplier")
+      .join(broadcast(Tables.load(spark, dir, "nation")),
+        col("s_nationkey") === col("n_nationkey"))
       .groupBy("n_name").count()))
     Seq("lineitem", "orders", "customer", "part", "events", "documents",
-      "embeddings").foreach(t =>
-        guarded(s"warmup $t")(exec(Tables.load(spark, sfDir, t))))
+      "embeddings").foreach(t => guarded(s"warmup $t")(exec(Tables.load(spark, dir, t))))
+  }
 
-    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val controlTimes = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val streamEarly = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val failed = scala.collection.mutable.ArrayBuffer[String]()
-    val scaleTimes = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val scaleCtl = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val twinTimes = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val twinCtl = scala.collection.mutable.LinkedHashMap[String, Double]()
-    var b5PlanMatch: Option[Boolean] = None
-    var suiteAttempted = false
-    var artifactWriteFailed = false
+  private lazy val writeProbePath = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
+    s"/graft_wprobe_${ProcessHandle.current().pid()}"
 
-    def jmap(m: scala.collection.Map[String, Double]): String =
-      m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-
-    // Emit the artifact pair from whatever state exists RIGHT NOW.
-    // Called after the headline pass (so a mid-suite timeout still
-    // leaves a valid, parseable, honest artifact), after the suite+twin,
-    // and finally after the scale step. `run_stage`/`suite_incomplete`
-    // mark how far the run got; `skipped` lists every budget-skipped
-    // step explicitly.
-    def emit(stage: String, printFull: Boolean, printSummary: Boolean): Unit = {
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      val ratios = controlTimes.toSeq.sortBy(_._1)
-        .map { case (k, v) =>
-          "\"" + k + "\":" + f"${results.getOrElse(k, -1.0) / math.max(v, 1e-9)}%.2f" }
-        .mkString("{", ",", "}")
-      val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val skippedJson = skipped.toSeq.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val total = results.values.sum
-      // artifact-completeness gate: every registry query must appear in
-      // this run's own results, failed, or (budget-)skipped list — the
-      // r8 failure mode was a suite that silently shrank. Meaningless
-      // before the suite loop starts, so [] at the headline stage.
-      val missingFromSuite =
-        if (!suiteAttempted) Seq.empty[String]
-        else (Queries.queries.keySet -- results.keySet -- failed.toSet
-          -- skipped.toSet -- rotated.toSet).toSeq.sorted
-      val missingJson = missingFromSuite.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val pm = planMatches.toSeq
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val diag = scaleDiag.toSeq
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      // q_monster is the END-of-suite PAIR-protocol reading (same
-      // protocol as b1_monster) — a pure start-vs-end drift thermometer.
-      // An ABSENT reading is UNKNOWN, not perfect: spread
-      // reads -1 and the run stays `contaminated` until both exist.
-      val twinSpreadOpt = for {
-        a <- twinTimes.get("q_monster_twin"); b <- results.get("b1_monster")
-      } yield math.abs(a - b) / math.max(math.min(a, b), 1e-9)
-      val twinSpread = twinSpreadOpt.getOrElse(-1.0)
-      val contaminated = twinSpreadOpt.map(_ > 3.0).getOrElse(true)
-      val twin = s"""{"q_monster":${twinTimes.getOrElse("q_monster_twin", -1.0)},"b1_monster":${results.getOrElse("b1_monster", -1.0)},"spread":${f"$twinSpread%.2f"}}"""
-      val b5pm = b5PlanMatch.map(_.toString).getOrElse("null")
-      val incomplete = stage != "complete"
-      // out_of_band: key → {runs, probe_s, machine_index}. `runs` is ALL
-      // readings (the original run(s) plus the confirming re-run when the
-      // budget funded one); `probe_s`/`machine_index` stamp the machine's
-      // speed AT the guard fire via the pinned control probe (index ≈
-      // reading/band on a uniformly slow window — the failure mode a
-      // confirming run inside the window cannot attribute). Empty in a
-      // clean run. Last run back in band OR index ≈ reading/band = drift
-      // window, attributed; runs agreeing out of band at index ≈ 1.0 =
-      // investigate as a real regression against bench_bands.json.
-      val oob = outOfBand.toSeq.map { case (k, e) =>
-        "\"" + k + "\":{\"runs\":" +
-          e.runs.map(v => f"$v%.3f").mkString("[", ",", "]") +
-          f""","probe_s":${e.probeS}%.3f,"machine_index":${e.machineIndex}%.2f""" +
-          f""","hash_probe_s":${e.hashProbeS}%.3f,"hash_index":${e.hashIndex}%.2f""" +
-          f""","write_probe_s":${e.writeProbeS}%.3f,"write_index":${e.writeIndex}%.2f}"""
-      }.mkString("{", ",", "}")
-      // warm evidence: banded readings in [1.5x, 2x) band — no fire, no
-      // re-run, just the three lane indexes at that instant
-      val warmJson = warmStamps.toSeq.map { case (k, w) =>
-        "\"" + k + "\":{" +
-          f""""reading":${w.reading}%.3f,"band":${w.band}%.3f""" +
-          f""","ratio":${w.reading / math.max(w.band, 1e-9)}%.2f""" +
-          f""","sort_index":${w.sortIndex}%.2f,"hash_index":${w.hashIndex}%.2f""" +
-          f""","write_index":${w.writeIndex}%.2f}"""
-      }.mkString("{", ",", "}")
-      val rotatedJson = rotated.toSeq.map("\"" + _ + "\"").mkString("[", ",", "]")
-      // keys timed this run that have no committed band (the guard
-      // silently skipped them, which needs to be LOUD), and the
-      // banded-miss CONTROL keys too (machine_index's denominator thins
-      // silently without them)
-      val unbanded = (results.keySet
-        ++ scaleTimes.keys.map(_ + "_10x") ++ scaleCtl.keys.map(_ + "_1x")
-        ++ ctlUnbanded)
-        .filterNot(bands.contains).toSeq.sorted
-      val unbandedJson = unbanded.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val mprobe = probeCalibration.map(p => f"$p%.3f").getOrElse("-1")
-      val hprobe = hashProbeCalibration.map(p => f"$p%.3f").getOrElse("-1")
-      val wprobe = writeProbeCalibration.map(p => f"$p%.3f").getOrElse("-1")
-      def tailFields(rotatedField: String) = s""""controls":${jmap(controlTimes)},"ratio_vs_control":$ratios,"plan_match":$pm,"b5_plan_match_10x":$b5pm,"twin_check":$twin,"contaminated":$contaminated,"missing_from_suite":$missingJson,"skipped":$skippedJson,$rotatedField,"unbanded":$unbandedJson,"stream_early":${jmap(streamEarly)},"out_of_band":$oob,"warm":$warmJson,"machine_index":${f"$machineIndex%.2f"},"machine_probe_s":$mprobe,"machine_hash_probe_s":$hprobe,"machine_write_probe_s":$wprobe,"run_stage":"$stage","suite_incomplete":$incomplete,"budget_s":$budgetS,"elapsed_s":${f"$elapsedS%.1f"}"""
-      // field order matters: the round artifact keeps only a TAIL of
-      // stdout, so the big maps (per-query timings, 10x scale maps, diag
-      // counters) go FIRST and every summary number cited by the judge
-      // goes LAST — they survive truncation.
-      val json = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries":$qs,"scale10x":${jmap(scaleTimes)},"scale10x_controls":${jmap(scaleCtl)},"scale10x_diag":$diag,"failed":$failedJson,${tailFields(s""""rotated":$rotatedJson""")}}"""
-      // compact summary (≤2 KB): fully self-contained valid JSON with
-      // only the headline timings in `queries`, printed as its own
-      // stdout line so a tail capture of any length parses it.
-      // The 10x headline pairs ride the
-      // summary's `queries` map under `_10x` keys — at sf0.1 the 1x
-      // keys sit at the per-query session floor, so the driver's
-      // 8-vs-32-cpu scaling block needs the 10x points to be
-      // informative (ADDED keys only; `value` stays the suite total of
-      // `results`) — and the 87-key rotated list stays in
-      // BENCH_FULL.json with only its COUNT in this tail line (a
-      // truncated tail once lost a round's geomean).
-      val headlineQs = results.filter { case (k, _) => k.startsWith("b") } ++
-        scaleTimes.collect { case (k, v) if k.startsWith("b") => s"${k}_10x" -> v }
-      val summary = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries":${jmap(headlineQs)},"failed":$failedJson,${tailFields(s""""rotated_n":${rotated.size}""")},"full_artifact":"BENCH_FULL.json","summary_artifact":"BENCH_SUMMARY.json"}"""
-      // the artifacts land in the run's working directory; the compact
-      // summary ALSO lands as a file: pure JSON, no log framing, for
-      // parsers the stdout tail defeats. A failed write is reported and
-      // fails the run at exit, after the stdout lines are printed.
-      Seq("BENCH_FULL.json" -> s"$json\n", "BENCH_SUMMARY.json" -> s"$summary\n",
-          "BENCH_PLANS.txt" -> planDump.toString).foreach { case (name, body) =>
-        val f = java.nio.file.Paths.get(sys.props.getOrElse("user.dir", "."), name)
-        try java.nio.file.Files.writeString(f, body)
-        catch { case NonFatal(e) =>
-          System.err.println(s"[bench] could not write $f: $e")
-          artifactWriteFailed = true
+  /** Registers every table as a temp view (the probes' and B6's controls
+    * read them), wires each of the [[lanes]] to its pinned plan and takes
+    * the start-of-run calibration: each probe's baseline until its
+    * committed band exists, and the artifact's own record of what "quiet"
+    * meant for this run. A probe runs once to burn, then min-of-2, with NO
+    * hygiene — it must sample the environment the guarded reading just
+    * ran in, not a freshly-scrubbed one.
+    */
+  private def calibrate(spark: SparkSession, dir: String): Unit = {
+    Tables.names.foreach { n =>
+      guarded(s"view $n")(Tables.load(spark, dir, n).createOrReplaceTempView(n))
+    }
+    def run(df: => DataFrame): () => () => Unit = () => {
+      val p = df
+      () => exec(p)
+    }
+    // in [[lanes]] order: sort (B6's control), hash, write
+    val plans = Seq(run(mrbench(spark, dir)._2),
+      run(spark.sql("""SELECT count(DISTINCT md5(concat_ws('|',
+        l_orderkey, l_linenumber, l_partkey))) AS n FROM lineitem""")),
+      () => {
+        // a fixed 1.5M-row table with trivially cheap columns (no md5,
+        // no sort), so the reading is write-bound
+        val df = spark.range(0, 1500000, 1, 8)
+          .select(col("id"), pmod(col("id") * 2654435761L, lit(1000003L)).as("k"),
+            concat(lit("graft-write-probe-value-"), col("id")).as("s"))
+        () => {
+          val t = graft.ops.Checkpoints.truncateTracked(df)
+          try t.df.write.mode("overwrite").parquet(writeProbePath)
+          finally t.release()
         }
+      })
+    lanes = lanes.zip(plans).map { case (lane, plan) =>
+      val probe = () => guarded(s"${lane.name} probe") {
+        val once = plan()
+        once() // burn
+        math.min(time(once()), time(once()))
       }
-      if (printFull) println(json)
-      if (printSummary) println(summary)
-      System.out.flush()
+      lane.copy(probe = probe, calibration = probe())
     }
+  }
 
-    // headline benches timed INTERLEAVED with their native-SQL controls
-    // via measurePair (burn pair + symmetric ABBA + adaptive retries — see
-    // its scaladoc for why each piece exists), with a plan-identity check
-    // per pair: a reported ratio on matching plans measures environment
-    // spread, and the retries bound it
-    val ctl = controls(spark, sfDir).toMap
-    // machine probe: the cheapest plan-pinned hand-SQL control (the b6
-    // supplier sort), re-executed at every band-guard fire so each
-    // out_of_band entry records the machine's speed at its own instant.
-    // One burn + min-of-2, no hygiene (see the normalizer scaladoc).
-    machineProbeFn = () => try {
-      val p = spark.sql("SELECT * FROM supplier ORDER BY s_name")
-      exec(p)
-      Some(math.min(time(exec(p)), time(exec(p))))
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] machine probe failed: ${e.getMessage}")
-      None
-    }
-    hashProbeFn = () => try {
-      // md5-bound pinned SQL — the hash-lane thermometer (see the
-      // hashProbeFn scaladoc); one burn + min-of-2, no hygiene
-      val p = spark.sql("""SELECT count(DISTINCT md5(concat_ws('|',
-        l_orderkey, l_linenumber, l_partkey))) AS n FROM lineitem""")
-      exec(p)
-      Some(math.min(time(exec(p)), time(exec(p))))
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] hash probe failed: ${e.getMessage}")
-      None
-    }
-    // write-lane thermometer: localCheckpoint + parquet
-    // write of a fixed 1.5M-row table — the PageRank per-iteration cost
-    // shape (checkpoint blocks + FS bytes), with the column work kept
-    // trivially cheap (no md5, no sort) so the reading is write-bound.
-    // One burn + min-of-2, no hygiene, like the other two lanes.
-    val wprobePath = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      s"/graft_wprobe_${ProcessHandle.current().pid()}"
-    writeProbeFn = () => try {
-      val df = spark.range(0, 1500000, 1, 8)
-        .select(col("id"), pmod(col("id") * 2654435761L, lit(1000003L)).as("k"),
-          concat(lit("graft-write-probe-value-"), col("id")).as("s"))
-      def once(): Double = time {
-        val t = graft.ops.Checkpoints.truncateTracked(df)
-        try t.df.write.mode("overwrite").parquet(wprobePath)
-        finally t.release()
-      }
-      once() // burn
-      Some(math.min(once(), once()))
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] write probe failed: ${e.getMessage}")
-      None
-    }
-    // start-of-run calibration: each probe's in-run baseline until its
-    // committed band exists (first round), and the artifact's own record
-    // of what "quiet" meant for this run
-    probeCalibration = machineProbeFn()
-    hashProbeCalibration = hashProbeFn()
-    writeProbeCalibration = writeProbeFn()
-
-    headline(spark, sfDir).foreach { case (name, df) =>
-      ctl.get(name) match {
-        case Some(c) =>
-          checkPlanMatch(s"${name}_1x", df, c)
-          measurePair(spark, name, df, c, results, controlTimes,
-            ctlBandKey = Some(s"${name}_ctl"))
-        case None =>
-          results(name) = Seq(time(exec(df)), time(exec(df))).min
-      }
-    }
-    // B6 MRBench analog: repeated small sort, avg latency over 5 runs,
-    // paired with a native-SQL control (BASELINE.md's criterion is ≤2x a
-    // native control for EVERY bench) — order alternates per rep so
-    // neither side systematically inherits the cleaner slot, and the
-    // plan-identity bit certifies any gap as environment, not plans
+  /** The 1x gridmix pairs, then B6: repeated small sort, avg latency over
+    * 5 runs with the order alternating per rep so neither side
+    * systematically inherits the cleaner slot, and the plan-identity bit
+    * certifies any gap as environment, not plans.
+    */
+  private def headline(spark: SparkSession, run: Run,
+                       pairs: Seq[(String, DataFrame, DataFrame)]): Unit = {
+    runPairs(spark, pairs, "1x", "_ctl", run.queries, run.controls)
     guarded("b6_mrbench") {
-      val nat = Tables.load(spark, sfDir, "supplier")
-      val b6ours = nat.orderBy("s_name")
-      val b6ctl = spark.sql("SELECT * FROM supplier ORDER BY s_name")
-      checkPlanMatch("b6_mrbench_1x", b6ours, b6ctl)
+      val (ours, ctl) = mrbench(spark, run.sfDir)
+      checkPlanMatch("b6_mrbench_1x", ours, ctl)
       hygiene(spark)
-      exec(b6ctl); exec(b6ours) // burn pair — same rationale as measurePair
-      var b6o = 0.0; var b6c = 0.0
+      exec(ctl); exec(ours) // burn pair — same rationale as measurePair
+      var o = 0.0; var c = 0.0
       (0 until 5).foreach { i =>
-        if (i % 2 == 0) { b6c += time(exec(b6ctl)); b6o += time(exec(b6ours)) }
-        else { b6o += time(exec(b6ours)); b6c += time(exec(b6ctl)) }
+        if (i % 2 == 0) { c += time(exec(ctl)); o += time(exec(ours)) }
+        else { o += time(exec(ours)); c += time(exec(ctl)) }
       }
-      results("b6_mrbench_avg") = b6o / 5
-      controlTimes("b6_mrbench_avg") = b6c / 5
-      registerControl("b6_mrbench_avg_ctl", b6c / 5)
+      run.queries("b6_mrbench_avg") = o / 5
+      run.controls("b6_mrbench_avg") = c / 5
+      registerControl("b6_mrbench_avg_ctl", c / 5)
     }
+  }
 
-    // The q_stream_* family has read 1.3–2x its earlier absolutes in the
-    // LATE suite loop while fresh-JVM re-reads landed in band. Measure the
-    // two worst HERE — early JVM, the same min-of-2 + hygiene protocol as
-    // the suite loop — so every artifact
-    // carries its own early-vs-late stream pair (`stream_early` vs the
-    // suite-loop entries in `queries`) and an inflation is attributed to
-    // JVM age per run instead of suspected across rounds.
+  /** The q_stream_* family has read 1.3–2x its earlier absolutes in the
+    * LATE suite loop while fresh-JVM re-reads landed in band. Measure the
+    * two worst HERE — early JVM, the same min-of-2 + hygiene protocol as
+    * the suite loop — so every artifact carries its own early-vs-late
+    * stream pair (`stream_early` vs the suite-loop entries in `queries`)
+    * and an inflation is attributed to JVM age per run instead of
+    * suspected across rounds.
+    */
+  private def streamEarly(spark: SparkSession, run: Run): Unit =
     Seq("q_stream_attribution", "q_stream_join_outer").foreach { name =>
       Queries.queries.get(name).foreach { fn =>
-        try {
+        guarded(s"stream-early $name") {
           hygiene(spark)
-          streamEarly(name) = math.min(
-            time(exec(fn(spark, sfDir))), time(exec(fn(spark, sfDir))))
-        } catch { case NonFatal(e) =>
-          System.err.println(s"[bench] stream-early $name failed: ${e.getMessage}")
+          run.streamEarly(name) = math.min(
+            time(exec(fn(spark, run.sfDir))), time(exec(fn(spark, run.sfDir))))
         }
       }
     }
 
-    // EARLY artifact: headline ratios + plan bits are certified; a
-    // timeout anywhere past this point still leaves this valid artifact
-    // (marked suite_incomplete, twin unknown → contaminated)
-    emit("headline", printFull = false, printSummary = true)
+  /** The scale step: the gridmix pairs at 10x, then the d-series trend
+    * table.
+    */
+  private def scale(spark: SparkSession, run: Run): Unit = {
+    // the 10x control readings land in scale10x_controls, whose band
+    // keys carry the _1x suffix (make_bands.py convention)
+    runPairs(spark, gridmix(spark, run.sfDir, 10), "10x", "_1x",
+      run.scale10x, run.scale10xCtl)
+    // staging for the streaming rows lives outside scratchRoot, which
+    // hygiene deletes between runs
+    val scratch = java.nio.file.Files.createTempDirectory("graft_scale").toString
+    try runTrends(spark, trendTable(spark, run.sfDir, scratch), scratch,
+      run.scale10x, run.scale10xCtl, run.failed)
+    finally rmrf(new java.io.File(scratch))
+    hygiene(spark)
+  }
 
-    // d-series BEFORE the suite loop: a run that blows the 2700 s budget
-    // inside the 282-key suite loop once skipped 29 trend keys, leaving
-    // no full d-series sweep. The trend points are the uncompressible
-    // scale certification; the suite tail is individually cheap,
-    // band-guarded and rotatable — so it, not the d-series, now absorbs
-    // a slow machine window.
-    b5PlanMatch = Some(runScaleStep(spark, sfDir, scaleTimes, scaleCtl, failed))
-    emit("scale", printFull = false, printSummary = false)
+  // ---- adaptive rotation. One slow window skipped 30 banded suite-tail
+  // keys when the budget ran out: the budget governor sheds from the
+  // alphabetical TAIL — whatever sorts last, regardless of cost or signal.
+  // Shed DELIBERATELY instead: project the remaining suite cost from each
+  // pending key's committed band x the live machine_index, and when the
+  // projection no longer fits the remaining budget (after the twin +
+  // artifact reserve), rotate out pending sub-[[AdaptiveRotateBelowS]] keys
+  // CHEAPEST FIRST — encounter-order shedding was seen dropping
+  // q_dedup_incr_near (a 2 s signal-bearing key with a freshly-protected
+  // band) before forty 0.3 s tail keys, exactly the wrong coverage spend.
+  // Bands carry forward for shed keys like parity-rotated ones. Stream keys
+  // (the documented drift detector) and unbanded keys (rows still earning a
+  // band) are never shed; keys the shedding cannot cover still hit the
+  // honest `skipped` governor. Disabled with rotation (BENCH_ROTATION=off).
+  private val AdaptiveRotateBelowS = 3.0
 
-    // full correctness-suite queries (operator coverage under timing) —
-    // min-of-2 for short queries; a single run for ≥5 s readings (the
-    // round-over-round drift the extra run bounds lives in the SHORT
-    // denominators — a budget post-mortem traded the second long run for
-    // finishing inside the driver's timeout). A failed query is
-    // recorded in `failed`, NOT as a (misleadingly short) fail-fast
-    // elapsed time; a budget-skipped one lands in `skipped`; a
-    // rotated-out sub-second tail key lands in `rotated` (see the
-    // rotation scaladoc) without being timed at all.
-    suiteAttempted = true
-    // ---- adaptive rotation. One slow window skipped 30 banded suite-tail
-    // keys when the budget ran out: the budget governor sheds from the
-    // alphabetical TAIL — whatever sorts last, regardless of cost or signal.
-    // Shed DELIBERATELY instead: project the remaining suite cost from each
-    // pending key's committed band x the live machine_index, and when the
-    // projection no longer fits the remaining budget (after the twin +
-    // artifact reserve), rotate out pending sub-[[AdaptiveRotateBelowS]] keys
-    // CHEAPEST FIRST — encounter-order shedding was seen dropping
-    // q_dedup_incr_near (a 2 s signal-bearing key with a freshly-protected
-    // band) before forty 0.3 s tail keys, exactly the wrong coverage spend.
-    // Bands carry forward for shed keys like parity-rotated ones. Stream keys
-    // (the documented drift detector) and unbanded keys (rows still earning a
-    // band) are never shed; keys the shedding cannot cover still hit the
-    // honest `skipped` governor. Disabled with rotation (BENCH_ROTATION=off).
-    val AdaptiveRotateBelowS = 3.0
-    val suiteSeq = Queries.queries.toSeq.sortBy(_._1)
+  /** Runs the correctness-suite keys in order (operator coverage under
+    * timing); each call of a key's body runs it once and returns its
+    * seconds. The protocol (SCALING.md "Suite-loop protocol"):
+    *  - a key `rotate` picks (default [[rotatedOut]]) or adaptive
+    *    shedding picks lands in `rotated` without being timed;
+    *  - a key the budget cannot fund with `reserveS` seconds to spare
+    *    (room for the twin + artifact writes) lands in `skipped`;
+    *  - hygiene, then min-of-2 for short keys — a single run for ≥5 s
+    *    readings (the round-over-round drift the extra run bounds lives in
+    *    the SHORT denominators; a budget post-mortem traded the second
+    *    long run for finishing inside the driver's timeout) — and a third
+    *    run when the two disagree by >50% (one hit a drift window: GC,
+    *    cleanup, page-cache churn). q_stream_* keeps min-of-2 at any
+    *    duration: the micro-batch family is the one documented to catch
+    *    machine-level drift windows (once five consecutive stream
+    *    readings read 2–8× while everything after landed in band), and a
+    *    single reading can't tell a window from a regression;
+    *  - [[bandGuarded]]: an out-of-band reading buys one hygiene-separated
+    *    confirming run (the single run for ≥5 s once let a 79 s
+    *    q_substring_trim_exact ship unconfirmed) and the artifact records
+    *    both;
+    *  - a key that throws lands in `failed`, NOT as a (misleadingly
+    *    short) fail-fast elapsed time.
+    */
+  private[graft] def runSuite(spark: SparkSession, keys: Seq[(String, () => Double)],
+                              results: mutable.Map[String, Double],
+                              failed: mutable.Buffer[String],
+                              rotate: String => Boolean = rotatedOut,
+                              reserveS: Double = 150): Unit = {
     def estCost(name: String): Double =
       // min-of-2 below 5 s and for q_stream at any duration (the loop's
       // own protocol), + hygiene ~0.6 s; unbanded keys get a
@@ -804,192 +714,175 @@ object Bench {
         val runs = if (b < 5.0 || name.startsWith("q_stream")) 2 else 1
         runs * b + 0.6
       }.getOrElse(12.0)
-    // keys not yet processed this run (parity-rotated ones excluded up
-    // front) — the overrun projection sums their banded estimates
-    val pendingKeys = scala.collection.mutable.LinkedHashSet(
-      suiteSeq.collect { case (n, _) if !rotatedOut(n) => n }: _*)
-    def projectedS: Double =
-      pendingKeys.iterator.map(estCost).sum * math.max(1.0, machineIndex)
-    val shedSet = scala.collection.mutable.LinkedHashSet[String]()
+    // keys not yet processed this run (rotated ones excluded up front) —
+    // the overrun projection sums their banded estimates
+    val pending = mutable.LinkedHashSet(keys.map(_._1).filterNot(rotate): _*)
+    def projectedS: Double = pending.iterator.map(estCost).sum * math.max(1.0, machineIndex)
+    val shed = mutable.LinkedHashSet[String]()
     def deepenRotation(): Unit = if (rotationParity.nonEmpty) {
-      val eligible = scala.collection.mutable.TreeSet.empty[(Double, String)]
-      pendingKeys.foreach { n =>
+      val eligible = mutable.TreeSet.empty[(Double, String)]
+      pending.foreach { n =>
         if (!n.startsWith("q_stream"))
-          bands.get(n).filter(_ < AdaptiveRotateBelowS)
-            .foreach(b => eligible += ((b, n)))
+          bands.get(n).filter(_ < AdaptiveRotateBelowS).foreach(b => eligible += ((b, n)))
       }
       while (projectedS > remainingS - 170 && eligible.nonEmpty) {
         val (b, cheapest) = eligible.head
         eligible.remove((b, cheapest))
-        shedSet += cheapest
-        pendingKeys -= cheapest
+        shed += cheapest
+        pending -= cheapest
         System.err.println(f"[bench] adaptive-rotate $cheapest " +
           f"(band $b%.2f s, projected $projectedS%.0f s, " +
           f"remaining $remainingS%.0f s, machine_index $machineIndex%.2f)")
       }
     }
-    suiteSeq.foreach { case (name, fn) =>
-      if (rotatedOut(name)) rotated += name
-      else if ({ deepenRotation(); shedSet(name) }) rotated += name
-      // reserve room for the twin + artifact writes before the budget
-      // wall (the d-series already ran — it no longer needs a rump here)
-      else if ({ pendingKeys -= name; budgetOk(name, 150) }) try {
-        hygiene(spark) // clean slate per query — see hygiene scaladoc
-        val runs = scala.collection.mutable.ArrayBuffer(
-          time(exec(fn(spark, sfDir))))
-        // q_stream_* keeps min-of-2 at any duration: the micro-batch
-        // family is the one documented to catch machine-level drift
-        // windows (once five consecutive stream readings read 2–8×
-        // while everything after landed in band), and a single reading
-        // can't tell a window from a regression
-        if (runs.head < 5.0 || name.startsWith("q_stream")) {
-          runs += time(exec(fn(spark, sfDir)))
-          // two runs disagreeing >50% means one hit a drift window (GC,
-          // cleanup, page-cache churn) — a third run resolves which
-          if (math.abs(runs(0) - runs(1)) / math.max(runs.min, 1e-9) > 0.5)
-            runs += time(exec(fn(spark, sfDir)))
+    keys.foreach { case (name, run) =>
+      if (rotate(name)) rotated += name
+      else if ({ deepenRotation(); shed(name) }) rotated += name
+      else if ({ pending -= name; budgetOk(name, reserveS) }) {
+        val reading = guarded(name) {
+          hygiene(spark)
+          val runs = mutable.ArrayBuffer(run())
+          if (runs.head < 5.0 || name.startsWith("q_stream")) {
+            runs += run()
+            if (math.abs(runs(0) - runs(1)) / math.max(runs.min, 1e-9) > 0.5) runs += run()
+          }
+          bandGuarded(name, runs.toSeq, () =>
+            guarded(s"band-guard rerun $name") { hygiene(spark); run() })
         }
-        // band guard: the single-run-for-≥5 s protocol saved the budget
-        // but let one drifty reading ship unconfirmed (a 79 s
-        // q_substring_trim_exact) — an out-of-band reading now buys its
-        // own confirming run and the artifact records both
-        results(name) = bandGuarded(name, runs.toSeq, () =>
-          try { hygiene(spark); Some(time(exec(fn(spark, sfDir)))) }
-          catch { case NonFatal(e) =>
-            // a crashing confirming run must be distinguishable from an
-            // unfunded one in the logs (it is None either way)
-            System.err.println(
-              s"[bench] band-guard rerun $name failed: ${e.getMessage}")
-            None
-          })
-      } catch { case NonFatal(e) =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        failed += name
+        reading match {
+          case Some(v) => results(name) = v
+          case None => failed += name
+        }
       }
     }
     hygiene(spark)
-
-    // twin self-check: q_monster and b1_monster execute the SAME
-    // Queries.queries("q_monster") DataFrame — any large spread between
-    // them is environment drift inside this run, not a plan difference,
-    // and flags every absolute number in this JSON as suspect (r3 read
-    // 12.04s vs 1.15s on the twins; that run's absolutes were discarded).
-    // Readings taken under DIFFERENT protocols (suite min-of-2 loop vs
-    // burn+ABBA pair) once grew the spread 0.03 → 0.81 on identical
-    // plans — protocol mismatch, not drift. Both twins now
-    // run under the pair protocol: b1_monster in the headline pass at the
-    // start of the run, the q_monster twin re-measured HERE (end of the
-    // suite loop) against the same native-SQL control, so the spread is a
-    // pure start-vs-end drift thermometer on identical plans + protocol.
-    for {
-      twinOurs <- guarded("twin q_monster")(Queries.queries("q_monster")(spark, sfDir))
-      twinControl <- ctl.get("b1_monster")
-    } measurePair(spark, "q_monster_twin", twinOurs, twinControl, twinTimes,
-      twinCtl, ctlBandKey = Some("b1_monster_ctl")) // end-of-run machine point
-
-    // final artifact: the full line + summary, printed as the LAST
-    // stdout lines so any tail capture parses the summary
-    emit("complete", printFull = true, printSummary = true)
-    rmrf(new java.io.File(wprobePath)) // write-probe scratch
-    spark.stop()
-    val missingFromSuite = (Queries.queries.keySet -- results.keySet
-      -- failed.toSet -- skipped.toSet -- rotated.toSet).toSeq.sorted
-    if (failed.nonEmpty || missingFromSuite.nonEmpty || artifactWriteFailed) sys.exit(1)
   }
 
-  /** Headline benches + controls over 10x-amplified inputs, then the
-    * d-series trend table — the scale step: same plans over input
-    * amplified with a range-explode (keys re-salted to stay unique), to
-    * catch super-linearity an order of magnitude early. Single tables are
-    * amplified, not re-generated — this times plan scaling, it is not a
-    * correctness input. Returns whether the b5 ours/control physical
-    * plans match at 10x.
+  /** Twin self-check: q_monster and b1_monster execute the SAME
+    * `Queries.queries("q_monster")` DataFrame — any large spread between
+    * them is environment drift inside this run, not a plan difference,
+    * and flags every absolute number in the artifact as suspect (one run
+    * read 12.04 s vs 1.15 s on the twins; its absolutes were discarded).
+    * Readings under DIFFERENT protocols (suite min-of-2 loop vs burn+ABBA
+    * pair) once grew the spread 0.03 → 0.81 on identical plans, so both
+    * twins run under the pair protocol: b1_monster in the headline pass
+    * at the start of the run, the q_monster twin HERE (end of the suite
+    * loop) against the same native-SQL control — a pure start-vs-end drift
+    * thermometer on identical plans + protocol.
     */
-  private def runScaleStep(spark: SparkSession, sfDir: String,
-                           times: scala.collection.mutable.Map[String, Double],
-                           ctlTimes: scala.collection.mutable.Map[String, Double],
-                           failed: scala.collection.mutable.Buffer[String]): Boolean = {
-    // amplify: 10 copies, integer keys offset per copy so joins/sorts see
-    // 10x distinct keys, not 10x duplicates of each key. Exception:
-    // b5_wordcount groups on words from the duplicated text, so it sees
-    // 10x rows per key at FIXED key cardinality — that is intentional
-    // (it scales the combiner/partial-agg shape, the shape the reference's
-    // combiner benches stressed), not a key-scaling bench.
-    def amp(name: String, key: String): DataFrame =
-      copies(Tables.load(spark, sfDir, name), 10, key)
-    val li = amp("lineitem", "l_orderkey")
-    val ev = amp("events", "event_id")
-    val docs = amp("documents", "doc_id")
-    li.createOrReplaceTempView("lineitem10x")
-    ev.createOrReplaceTempView("events10x")
-    docs.createOrReplaceTempView("documents10x")
-    val part = Tables.load(spark, sfDir, "part")
-    part.createOrReplaceTempView("part10x") // dims stay 1x: 10x facts per part
-    val pairs: Seq[(String, DataFrame, DataFrame)] = Seq(
-      ("b1_monster", {
-        // q_monster's plan over the amplified facts: same filter/agg/
-        // broadcast-join/topk stages, 10x input, unchanged dimensions
-        val s1 = li.where(substring(md5((col("l_orderkey") * 8 + col("l_linenumber"))
-            .cast("string")), 1, 1).isin("0", "1"))
-          .groupBy("l_partkey")
-          .agg(sum(col("l_quantity").cast("long")).as("qty"),
-            sum(round(col("l_extendedprice") * 100, 0).cast("long")).as("rev_cents"))
-        s1.join(broadcast(part), col("l_partkey") === col("p_partkey"))
-          .groupBy("p_brand")
-          .agg(sum(col("rev_cents")).as("revenue_cents"), count(lit(1)).as("nparts"))
-          .orderBy(col("revenue_cents").desc, col("p_brand")).limit(10)
-      },
-        spark.sql("""
-          WITH s1 AS (
-            SELECT l_partkey, sum(CAST(l_quantity AS BIGINT)) AS qty,
-                   sum(CAST(round(l_extendedprice*100, 0) AS BIGINT)) AS rev_cents
-            FROM lineitem10x
-            WHERE substr(md5(CAST(l_orderkey*8 + l_linenumber AS STRING)), 1, 1) IN ('0','1')
-            GROUP BY 1),
-          s2 AS (
-            SELECT p_brand, sum(rev_cents) AS revenue_cents, count(1) AS nparts
-            FROM s1 JOIN part10x ON l_partkey = p_partkey GROUP BY 1)
-          SELECT * FROM s2 ORDER BY revenue_cents DESC, p_brand LIMIT 10""")),
-      ("b2_full_sort",
-        li.orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber")),
-        spark.sql("SELECT * FROM lineitem10x ORDER BY l_shipdate, l_orderkey, l_linenumber")),
-      ("b3_ref_select",
-        li.where(substring(md5(concat_ws("|", col("l_orderkey"), col("l_linenumber"))), 1, 2)
-          .isin("00")).coalesce(1),
-        spark.sql("""SELECT * FROM lineitem10x
-          WHERE substr(md5(concat_ws('|', l_orderkey, l_linenumber)), 1, 2) = '00'""").coalesce(1)),
-      ("b4_text_sort",
-        ev.select(concat_ws("\t", col("event_id"), col("event_type"),
-          col("user_id"), col("value")).as("line")).orderBy("line"),
-        spark.sql("""SELECT concat_ws('\t', event_id, event_type, user_id, value) AS line
-          FROM events10x ORDER BY line""")),
-      ("b5_wordcount",
-        docs.select(explode(split(col("text"), "\\s+")).as("w"))
-          .where(length(col("w")) > 0)
-          .groupBy("w").agg(count(lit(1)).as("cnt")),
-        spark.sql("""SELECT w, count(1) AS cnt FROM (
-          SELECT explode(split(text, '\\s+')) AS w FROM documents10x)
-          WHERE length(w) > 0 GROUP BY 1""")),
-    )
-    // measured via measurePair (burn pair + ABBA + adaptive retries —
-    // see its scaladoc), with a per-pair plan-identity check at 10x
-    pairs.foreach { case (name, ours, ctl) =>
-      checkPlanMatch(s"${name}_10x", ours, ctl)
-      // the 10x control readings land in scale10x_controls, whose band
-      // keys carry the _1x suffix (make_bands.py convention)
-      measurePair(spark, name, ours, ctl, times, ctlTimes,
-        ctlBandKey = Some(s"${name}_1x"))
-    }
-    val b5PlanMatch = planMatches.getOrElse("b5_wordcount_10x", false)
+  private def twin(spark: SparkSession, run: Run,
+                   pairs: Seq[(String, DataFrame, DataFrame)]): Unit =
+    for {
+      ours <- guarded("twin q_monster")(Queries.queries("q_monster")(spark, run.sfDir))
+      (_, _, ctl) <- pairs.find(_._1 == "b1_monster")
+    } run.twin = measurePair(spark, "q_monster_twin", ours, ctl, "b1_monster_ctl").map(_._1)
 
-    // staging for the streaming rows lives outside scratchRoot, which
-    // hygiene deletes between runs
-    val scratch = java.nio.file.Files.createTempDirectory("graft_scale").toString
-    try runTrends(spark, trendTable(spark, sfDir, scratch), scratch,
-      times, ctlTimes, failed)
-    finally rmrf(new java.io.File(scratch))
-    hygiene(spark)
-    b5PlanMatch
+  private def jmap(m: scala.collection.Map[String, Double]): String =
+    m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+      .mkString("{", ",", "}")
+  private def jarr(xs: Iterable[String]): String =
+    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** Writes the artifacts from whatever `run` holds RIGHT NOW — after the
+    * headline pass (so a mid-suite timeout still leaves a valid,
+    * parseable, honest artifact), after the scale step, and finally after
+    * the suite + twin. `run_stage`/`suite_incomplete` mark how far the
+    * run got; `skipped` lists every budget-skipped step explicitly.
+    */
+  private def emit(run: Run, stage: String, printFull: Boolean,
+                   printSummary: Boolean): Unit = {
+    val qs = run.queries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+      .mkString("{", ",", "}")
+    val ratios = run.controls.toSeq.sortBy(_._1)
+      .map { case (k, v) =>
+        "\"" + k + "\":" + f"${run.queries.getOrElse(k, -1.0) / math.max(v, 1e-9)}%.2f" }
+      .mkString("{", ",", "}")
+    val failedJson = jarr(run.failed.sorted)
+    val total = run.queries.values.sum
+    val pm = planMatches.toSeq
+      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val diag = scaleDiag.toSeq
+      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    // q_monster is the END-of-suite PAIR-protocol reading (same protocol
+    // as b1_monster) — a pure start-vs-end drift thermometer. An ABSENT
+    // reading is UNKNOWN, not perfect: spread reads -1 and the run stays
+    // `contaminated` until both exist.
+    val twinSpreadOpt = for { a <- run.twin; b <- run.queries.get("b1_monster") }
+      yield math.abs(a - b) / math.max(math.min(a, b), 1e-9)
+    val twinSpread = twinSpreadOpt.getOrElse(-1.0)
+    val contaminated = twinSpreadOpt.map(_ > 3.0).getOrElse(true)
+    val twin = s"""{"q_monster":${run.twin.getOrElse(-1.0)},"b1_monster":${run.queries.getOrElse("b1_monster", -1.0)},"spread":${f"$twinSpread%.2f"}}"""
+    val b5pm = planMatches.get("b5_wordcount_10x").map(_.toString).getOrElse("null")
+    // out_of_band: key → {runs, per-lane probe seconds and index}. `runs`
+    // is ALL readings (the original run(s) plus the confirming re-run
+    // when the budget funded one); each lane stamps the machine's speed AT
+    // the guard fire (index ≈ reading/band on a uniformly slow window —
+    // the failure mode a confirming run inside the window cannot
+    // attribute). Empty in a clean run. Last run back in band OR an index
+    // ≈ reading/band = drift window, attributed; runs agreeing out of band
+    // at every index ≈ 1.0 = investigate as a real regression against
+    // bench_bands.json. The sort lane, once the only one, keeps its
+    // original field names.
+    val oob = outOfBand.toSeq.map { case (k, e) =>
+      "\"" + k + "\":{\"runs\":" + e.runs.map(v => f"$v%.3f").mkString("[", ",", "]") +
+        lanes.zip(e.probes).map { case (l, (s, i)) =>
+          val (sf, xf) =
+            if (l.name == "sort") ("probe_s", "machine_index")
+            else (s"${l.name}_probe_s", s"${l.name}_index")
+          f""","$sf":$s%.3f,"$xf":$i%.2f"""
+        }.mkString + "}"
+    }.mkString("{", ",", "}")
+    // warm evidence: banded readings in [1.5x, 2x) band — no fire, no
+    // re-run, just every lane's index at that instant
+    val warmJson = warmStamps.toSeq.map { case (k, w) =>
+      "\"" + k + "\":{" +
+        f""""reading":${w.reading}%.3f,"band":${w.band}%.3f""" +
+        f""","ratio":${w.reading / math.max(w.band, 1e-9)}%.2f""" +
+        lanes.zip(w.indexes).map { case (l, i) => f""","${l.name}_index":$i%.2f""" }.mkString +
+        "}"
+    }.mkString("{", ",", "}")
+    // keys timed this run that have no committed band (the guard
+    // silently skipped them, which needs to be LOUD), and the
+    // banded-miss CONTROL keys too (machine_index's denominator thins
+    // silently without them)
+    val unbanded = (run.queries.keySet
+      ++ run.scale10x.keys.map(_ + "_10x") ++ run.scale10xCtl.keys.map(_ + "_1x")
+      ++ ctlUnbanded)
+      .filterNot(bands.contains).toSeq.sorted
+    val calibration = lanes.map { l =>
+      s""""${l.bandKey}_s":""" + l.calibration.map(p => f"$p%.3f").getOrElse("-1")
+    }.mkString(",")
+    def tailFields(rotatedField: String) = s""""controls":${jmap(run.controls)},"ratio_vs_control":$ratios,"plan_match":$pm,"b5_plan_match_10x":$b5pm,"twin_check":$twin,"contaminated":$contaminated,"missing_from_suite":${jarr(run.missingFromSuite)},"skipped":${jarr(skipped)},$rotatedField,"unbanded":${jarr(unbanded)},"stream_early":${jmap(run.streamEarly)},"out_of_band":$oob,"warm":$warmJson,"machine_index":${f"$machineIndex%.2f"},$calibration,"run_stage":"$stage","suite_incomplete":${stage != "complete"},"budget_s":$budgetS,"elapsed_s":${f"$elapsedS%.1f"}"""
+    // field order matters: the round artifact keeps only a TAIL of
+    // stdout, so the big maps (per-query timings, 10x scale maps, diag
+    // counters) go FIRST and every summary number cited by the judge
+    // goes LAST — they survive truncation.
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","sf":"${run.sfDir}","queries":$qs,"scale10x":${jmap(run.scale10x)},"scale10x_controls":${jmap(run.scale10xCtl)},"scale10x_diag":$diag,"failed":$failedJson,${tailFields(s""""rotated":${jarr(rotated)}""")}}"""
+    // compact summary (≤2 KB): fully self-contained valid JSON with only
+    // the headline timings in `queries`, printed as its own stdout line so
+    // a tail capture of any length parses it. The 10x headline pairs ride
+    // the summary's `queries` map under `_10x` keys — at sf0.1 the 1x keys
+    // sit at the per-query session floor, so the driver's 8-vs-32-cpu
+    // scaling block needs the 10x points to be informative (ADDED keys
+    // only; `value` stays the suite total of `queries`) — and the 87-key
+    // rotated list stays in BENCH_FULL.json with only its COUNT in this
+    // tail line (a truncated tail once lost a round's geomean).
+    val headlineQs = run.queries.filter { case (k, _) => k.startsWith("b") } ++
+      run.scale10x.collect { case (k, v) if k.startsWith("b") => s"${k}_10x" -> v }
+    val summary = s"""{"metric":"total","value":$total,"unit":"sec","sf":"${run.sfDir}","queries":${jmap(headlineQs)},"failed":$failedJson,${tailFields(s""""rotated_n":${rotated.size}""")},"full_artifact":"BENCH_FULL.json","summary_artifact":"BENCH_SUMMARY.json"}"""
+    // the artifacts land in the run's working directory; the compact
+    // summary ALSO lands as a file: pure JSON, no log framing, for
+    // parsers the stdout tail defeats. A failed write is reported and
+    // fails the run at exit, after the stdout lines are printed.
+    Seq("BENCH_FULL.json" -> s"$json\n", "BENCH_SUMMARY.json" -> s"$summary\n",
+        "BENCH_PLANS.txt" -> planDump.toString).foreach { case (name, body) =>
+      val f = java.nio.file.Paths.get(sys.props.getOrElse("user.dir", "."), name)
+      if (guarded(s"write $f")(java.nio.file.Files.writeString(f, body)).isEmpty)
+        run.writeFailed = true
+    }
+    if (printFull) println(json)
+    if (printSummary) println(summary)
+    System.out.flush()
   }
 
   /** `n` copies of `df` by a range-explode cross join. `idCol`, when
@@ -1131,39 +1024,33 @@ object Bench {
     *  - a side with no reading goes into `failed` as `<key>_1x` or
     *    `<key>_10x`, unless its budget was short (then `key` is in
     *    `skipped`).
-    * This holds the only NonFatal catch for trend rows and diag counters:
-    * a failure costs its own keys or counters, never the run. Fatal VM
-    * errors are not caught — readings after an OOM are untrustworthy.
+    * Every run, setup and diag goes through [[guarded]]: a failure costs
+    * its own keys or counters, never the run.
     */
   private[graft] def runTrends(spark: SparkSession, rows: Seq[Trend], scratch: String,
                                times: scala.collection.mutable.Map[String, Double],
                                ctlTimes: scala.collection.mutable.Map[String, Double],
                                failed: scala.collection.mutable.Buffer[String]): Unit = {
-    def attempt[A](what: String)(body: => A): Option[A] =
-      try Some(body) catch { case NonFatal(e) =>
-        System.err.println(s"[bench] $what failed: ${e.getMessage}")
-        None
-      }
     def record(stem: String, cs: Seq[(String, Long)]): Unit =
       cs.foreach { case (alias, v) => scaleDiag(s"${stem}_$alias") = v }
     var replays = 0
     rows.foreach { row =>
-      val ready = attempt(s"${row.key} setup")(row.setup()).nonEmpty
+      val ready = guarded(s"${row.key} setup")(row.setup()).nonEmpty
       lazy val replayFunded = budgetOk(row.key, row.budget)
       Seq((row.x1, "1x", ctlTimes), (row.x10, "10x", times)).foreach {
         case (side, scale, into) =>
           val band = s"${row.key}_$scale"
           def once(i: Int): Option[Double] = side match {
-            case Timed(run) => attempt(s"$band run $i") { hygiene(spark); time(run()) }
+            case Timed(run) => guarded(s"$band run $i") { hygiene(spark); time(run()) }
             case Replay(stage, cs, _) =>
               replays += 1
               val dir = s"$scratch/${band}_a$replays"
-              attempt(s"$band run $i") {
+              guarded(s"$band run $i") {
                 val phase2 = stage(dir)
                 hygiene(spark) // state reloads from the checkpoint
                 time(phase2())
               }.map { t =>
-                attempt(s"$band counters")(cs(dir))
+                guarded(s"$band counters")(cs(dir))
                   .foreach(record(s"${row.key.takeWhile(_ != '_')}_$scale", _))
                 t
               }
@@ -1197,7 +1084,7 @@ object Bench {
       if (ready) row.diags.foreach { d =>
         if (d.budget.forall(budgetOk(d.skip, _)))
           d.inputs.foreach { case (stem, f) =>
-            attempt(s"$stem diag")(f()).foreach(record(stem, _))
+            guarded(s"$stem diag")(f()).foreach(record(stem, _))
           }
       }
     }

@@ -190,6 +190,22 @@ object Queries {
         SELECT doc_id, ${minhashSigSql(numPerms)}
         FROM hx GROUP BY 1"""
 
+  /** q_monster's 3-stage keep-ratio pipeline over `li` and `part`; Bench
+    * runs the same body over 10x-amplified lineitem.
+    */
+  private[graft] def monster(li: DataFrame, part: DataFrame): DataFrame = {
+    val s1 = li.where(substring(md5((col("l_orderkey") * 8 + col("l_linenumber"))
+        .cast("string")), 1, 1).isin("0", "1"))
+      .groupBy("l_partkey")
+      .agg(sum(col("l_quantity").cast("long")).as("qty"),
+        sum(cents(col("l_extendedprice"))).as("rev_cents"))
+    val s2 = s1.join(broadcast(part), col("l_partkey") === col("p_partkey"))
+      .groupBy("p_brand")
+      .agg(sum(col("rev_cents")).as("revenue_cents"),
+        count(lit(1)).as("nparts"))
+    s2.orderBy(col("revenue_cents").desc, col("p_brand")).limit(10)
+  }
+
   // ---------------------------------------------------------------- specs
 
   final case class Q(fn: (SparkSession, String) => DataFrame, sql: Option[String])
@@ -1381,20 +1397,7 @@ object Queries {
     // ---- §2.7 pipelines (monsterQuery shape) -------------------------
 
     "q_monster" -> Q(
-      (s, dir) => {
-        val li = t(s, dir, "lineitem")
-        val s1 = li.where(substring(md5((col("l_orderkey") * 8 + col("l_linenumber"))
-            .cast("string")), 1, 1).isin("0", "1"))
-          .groupBy("l_partkey")
-          .agg(sum(col("l_quantity").cast("long")).as("qty"),
-            sum(cents(col("l_extendedprice"))).as("rev_cents"))
-        val s2 = s1.join(broadcast(t(s, dir, "part")),
-            col("l_partkey") === col("p_partkey"))
-          .groupBy("p_brand")
-          .agg(sum(col("rev_cents")).as("revenue_cents"),
-            count(lit(1)).as("nparts"))
-        s2.orderBy(col("revenue_cents").desc, col("p_brand")).limit(10)
-      },
+      (s, dir) => monster(t(s, dir, "lineitem"), t(s, dir, "part")),
       Some("""WITH s1 AS (
           SELECT l_partkey, sum(l_quantity::BIGINT)::BIGINT AS qty,
             sum((round(l_extendedprice*100, 0))::BIGINT)::BIGINT AS rev_cents

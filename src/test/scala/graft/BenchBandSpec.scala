@@ -76,41 +76,35 @@ class BenchBandSpec extends AnyFunSuite {
     // no Spark session in this spec → the default probes return None
     Bench.bandGuarded("q_wordcount", Seq(band * 5.0), () => None)
     val e = Bench.outOfBand("q_wordcount")
-    assert(e.probeS == -1.0 && e.machineIndex == -1.0)
-    assert(e.hashProbeS == -1.0 && e.hashIndex == -1.0)
-    assert(e.writeProbeS == -1.0 && e.writeIndex == -1.0)
+    val Seq(sort, hash, write) = Bench.lanes
+    assert(Bench.lanes.map(l => l.name -> l.bandKey) == Seq("sort" -> "machine_probe",
+      "hash" -> "machine_hash_probe", "write" -> "machine_write_probe"))
+    assert(e.probes(0) == ((-1.0, -1.0)))
+    assert(e.probes(1) == ((-1.0, -1.0)))
+    assert(e.probes(2) == ((-1.0, -1.0)))
     // wired probe → index = probe / baseline, where the baseline prefers
     // the COMMITTED machine_probe band (cross-round) over the run's own
     // calibration — a round whose bands predate the probe falls back
-    val saved = Bench.machineProbeFn
-    val savedHash = Bench.hashProbeFn
-    val savedWrite = Bench.writeProbeFn
+    val saved = Bench.lanes
     try {
-      Bench.machineProbeFn = () => Some(1.5)
-      Bench.probeCalibration = Some(0.5)
-      Bench.hashProbeFn = () => Some(2.0)
-      Bench.hashProbeCalibration = Some(0.5)
-      Bench.writeProbeFn = () => Some(3.0)
-      Bench.writeProbeCalibration = Some(1.0)
+      Bench.lanes = Seq(
+        sort.copy(probe = () => Some(1.5), calibration = Some(0.5)),
+        hash.copy(probe = () => Some(2.0), calibration = Some(0.5)),
+        write.copy(probe = () => Some(3.0), calibration = Some(1.0)))
       Bench.outOfBand.clear()
       Bench.bandGuarded("q_wordcount", Seq(band * 5.0), () => None)
       val e2 = Bench.outOfBand("q_wordcount")
       val baseline = Bench.bands.getOrElse("machine_probe", 0.5)
       val hBaseline = Bench.bands.getOrElse("machine_hash_probe", 0.5)
       val wBaseline = Bench.bands.getOrElse("machine_write_probe", 1.0)
-      assert(e2.probeS == 1.5 &&
-        math.abs(e2.machineIndex - 1.5 / baseline) < 1e-9)
-      assert(e2.hashProbeS == 2.0 &&
-        math.abs(e2.hashIndex - 2.0 / hBaseline) < 1e-9)
-      assert(e2.writeProbeS == 3.0 &&
-        math.abs(e2.writeIndex - 3.0 / wBaseline) < 1e-9)
+      assert(e2.probes(0)._1 == 1.5 &&
+        math.abs(e2.probes(0)._2 - 1.5 / baseline) < 1e-9)
+      assert(e2.probes(1)._1 == 2.0 &&
+        math.abs(e2.probes(1)._2 - 2.0 / hBaseline) < 1e-9)
+      assert(e2.probes(2)._1 == 3.0 &&
+        math.abs(e2.probes(2)._2 - 3.0 / wBaseline) < 1e-9)
     } finally {
-      Bench.machineProbeFn = saved
-      Bench.probeCalibration = None
-      Bench.hashProbeFn = savedHash
-      Bench.hashProbeCalibration = None
-      Bench.writeProbeFn = savedWrite
-      Bench.writeProbeCalibration = None
+      Bench.lanes = saved
       Bench.outOfBand.clear()
     }
   }
@@ -119,15 +113,13 @@ class BenchBandSpec extends AnyFunSuite {
     Bench.outOfBand.clear()
     Bench.warmStamps.clear()
     val band = Bench.bands("q_wordcount")
-    val saved = Bench.machineProbeFn
-    val savedHash = Bench.hashProbeFn
-    val savedWrite = Bench.writeProbeFn
+    val saved = Bench.lanes
     try {
-      Bench.machineProbeFn = () => Some(1.0)
-      Bench.probeCalibration = Some(0.5)
-      Bench.hashProbeFn = () => None
-      Bench.writeProbeFn = () => Some(2.0)
-      Bench.writeProbeCalibration = Some(1.0)
+      val Seq(sort, hash, write) = saved
+      Bench.lanes = Seq(
+        sort.copy(probe = () => Some(1.0), calibration = Some(0.5)),
+        hash.copy(probe = () => None),
+        write.copy(probe = () => Some(2.0), calibration = Some(1.0)))
       var reran = false
       val r = Bench.bandGuarded("q_wordcount", Seq(band * 1.7),
         () => { reran = true; Some(0.0) })
@@ -136,9 +128,9 @@ class BenchBandSpec extends AnyFunSuite {
       assert(w.reading == band * 1.7 && w.band == band)
       val baseline = Bench.bands.getOrElse("machine_probe", 0.5)
       val wBaseline = Bench.bands.getOrElse("machine_write_probe", 1.0)
-      assert(math.abs(w.sortIndex - 1.0 / baseline) < 1e-9)
-      assert(w.hashIndex == -1.0) // unavailable lane reads -1, not 0
-      assert(math.abs(w.writeIndex - 2.0 / wBaseline) < 1e-9)
+      assert(math.abs(w.indexes(0) - 1.0 / baseline) < 1e-9)
+      assert(w.indexes(1) == -1.0) // unavailable lane reads -1, not 0
+      assert(math.abs(w.indexes(2) - 2.0 / wBaseline) < 1e-9)
       // just-in-band and beyond-trip readings never land in warm
       Bench.warmStamps.clear()
       Bench.bandGuarded("q_wordcount", Seq(band * 1.4), () => None)
@@ -146,11 +138,7 @@ class BenchBandSpec extends AnyFunSuite {
       Bench.bandGuarded("q_wordcount", Seq(band * 2.5), () => Some(band))
       assert(Bench.warmStamps.isEmpty && Bench.outOfBand.nonEmpty)
     } finally {
-      Bench.machineProbeFn = saved
-      Bench.probeCalibration = None
-      Bench.hashProbeFn = savedHash
-      Bench.writeProbeFn = savedWrite
-      Bench.writeProbeCalibration = None
+      Bench.lanes = saved
       Bench.outOfBand.clear()
       Bench.warmStamps.clear()
     }
